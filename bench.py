@@ -40,9 +40,8 @@ def run_replay_bench(spark, n_events: int, n_buckets: int, parallelism: int,
     root = tempfile.mkdtemp(prefix="etl_spark_bench_", dir=base)
     wal = os.path.join(root, "wal")
     # write-optimized CDC-tail config: deltas land as-is (read-time LWW +
-    # compaction resolve winners, 2.1x dedup-on-write throughput); coarse
-    # write metrics (no per-merge row-count job)
-    props = {"batch_dedup": "false", "write_metrics": "coarse"}
+    # compaction resolve winners, 2.1x dedup-on-write throughput)
+    props = {"batch_dedup": "false"}
     try:
         t0 = time.monotonic()
         ev = synth_events(

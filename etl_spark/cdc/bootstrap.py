@@ -78,7 +78,7 @@ class BootstrapStats:
     chunks_total: int
     chunks_applied: int
     chunks_skipped: int  # already in the ledger (crash-resume)
-    rows_loaded: int     # 0 per chunk under write_metrics=coarse
+    rows_loaded: int     # rows the applied chunks wrote
     table_version: int
 
 
@@ -209,7 +209,7 @@ def bootstrap_snapshot(
         chunk = events.filter(F.col("__chunk") == i).drop("__chunk")
         stats = dest.merge(chunk, manifest_key=key)
         applied += 1
-        rows += stats.batch_rows
+        rows += stats.rows_written
         last_version = stats.version
 
     # release the expiry interlock only if this bootstrap still owns it

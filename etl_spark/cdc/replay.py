@@ -48,6 +48,26 @@ def replay_batches(
     return stats
 
 
+def _epoch_schema(root_fields: list, epoch_dir: str):
+    """Read schema of one WAL epoch: the WAL-root schema plus the columns
+    its first leaf file adds. Spark infers the root schema from ONE file,
+    so a column that later epochs add would otherwise be dropped and
+    additive schema evolution would never run; one driver-side footer
+    read (~1 ms) finds it without a schema-inference job per epoch."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    leaves = sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(epoch_dir) for f in fs
+        if f.endswith(".parquet") and not f.startswith(("_", ".")))
+    known = {f.name for f in root_fields}
+    added = [StructField(f.name, from_arrow_type(f.type), True)
+             for f in (pq.read_schema(leaves[0]) if leaves else [])
+             if f.name not in known]
+    return StructType(root_fields + added)
+
+
 def replay_events(
     spark: SparkSession,
     events_dir: str,
@@ -85,13 +105,11 @@ def replay_events(
     # null-filling it would evolve the table with a spurious column):
     # skips one footer-inference job per epoch, pure driver latency that
     # is part of the replay's non-scaling cost at any cluster size
-    from pyspark.sql.types import StructType as _ST
-
-    file_schema = _ST([f for f in sample.schema.fields if f.name != "epoch"])
+    root_fields = [f for f in sample.schema.fields if f.name != "epoch"]
     stats: list[MergeStats] = []
     for e in todo:
-        batch = spark.read.schema(file_schema).parquet(
-            os.path.join(events_dir, f"epoch={e}"))
+        edir = os.path.join(events_dir, f"epoch={e}")
+        batch = spark.read.schema(_epoch_schema(root_fields, edir)).parquet(edir)
         t0 = time.monotonic()
         st = table.merge(batch, manifest_key=f"epoch:{e}")
         if metrics_sink is not None:

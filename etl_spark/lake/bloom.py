@@ -25,7 +25,8 @@ per-file Bloom filters; LakeTable gets the same capability here.
   ``mapInPandas`` kernel ORs per-partition partial bitmaps with numpy and
   emits a few KiB per (partition, file, col); the driver ORs the partials.
   No shuffle, no collect of positions — the only driver traffic is
-  compressed bitmaps.
+  compressed bitmaps. ``bloom_bits: "auto"`` sizes each bitmap from the
+  row count the write already read from the file's footer: no extra job.
 * **Probe** — driver-side at plan time: ``file_matches`` (lake/stats.py)
   consults the bloom for ``=`` / ``in`` predicates after the zone map.
   WHICH predicates may prune WHICH file is unchanged — the merge-on-read
@@ -107,7 +108,6 @@ __all__ = [
     "bloom_positions",
     "bloom_may_contain",
     "auto_bits",
-    "file_row_counts",
     "build_file_blooms",
     "validate_bloom_cols",
 ]
@@ -277,29 +277,6 @@ def auto_bits(n_rows: int, bits_per_key: int = 10,
     while m < want and m < max_bits:
         m <<= 1
     return m
-
-
-def file_row_counts(spark, table_path: str, rel_paths: list[str]
-                    ) -> dict[str, int]:
-    """Parquet-footer ``num_rows`` per file — one metadata-only
-    distributed job, mirroring stats.harvest_file_stats."""
-    if not rel_paths:
-        return {}
-    root = table_path
-
-    def _part(paths):
-        import pyarrow.parquet as pq
-
-        for rel in paths:
-            try:
-                yield rel, pq.ParquetFile(
-                    os.path.join(root, rel)).metadata.num_rows
-            except Exception:  # noqa: BLE001 — unreadable: default size
-                yield rel, 0
-    n = max(1, min(len(rel_paths), 64))
-    got = spark.sparkContext.parallelize(sorted(rel_paths), n) \
-        .mapPartitions(_part).collect()
-    return dict(got)
 
 
 def build_file_blooms(

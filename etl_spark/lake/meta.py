@@ -20,9 +20,10 @@ Kinds
   Driver-side: the snapshot log is O(retained versions), already the
   thing ``expire_snapshots`` bounds.
 - ``files`` — one row per data file of one snapshot: bucket, row count,
-  bytes, row groups. Footer reads run EXECUTOR-side (same distributed
-  metadata-only job shape as lake/stats.py::harvest_file_stats — at
-  10^5 files this is one short parallel job, never a driver loop).
+  bytes, row groups. Footer reads run EXECUTOR-side, one metadata-only
+  job over the whole table: a query over every live file, unlike the
+  per-commit driver footer pass (lake/stats.py::read_footers) that
+  reads only a write's new files.
 - ``partitions`` — ``files`` aggregated per bucket (file/row/byte
   totals): the compaction planner's input — read amplification per
   bucket at a glance.

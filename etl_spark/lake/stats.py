@@ -4,10 +4,10 @@ Real Iceberg manifests carry per-data-file min/max column bounds and the
 scan planner drops files a predicate provably cannot match. LakeTable
 gets the same capability here:
 
-* **Harvest** — after a write publishes its files, ONE distributed job
-  reads the new files' parquet FOOTERS (pyarrow metadata only, no data
-  pages) and folds the row-group min/max per configured column into a
-  per-file ``[min, max]`` bound. Parquet writers may truncate long
+* **Harvest** — the write reads each new file's parquet FOOTER once, on
+  the driver (metadata only, ~0.1 ms a file: cheaper than starting any
+  Spark job), and folds the row-group min/max per configured column into
+  a per-file ``[min, max]`` bound. Parquet writers may truncate long
   binary/string bounds, but always outward (min prefix ≤ values ≤
   adjusted max), so the bound stays sound for pruning.
 * **Store** — bounds live in the snapshot JSON next to the file list
@@ -37,7 +37,7 @@ from decimal import Decimal
 __all__ = [
     "encode_bound",
     "decode_bound",
-    "harvest_file_stats",
+    "read_footers",
     "file_matches",
     "prunable_predicates",
 ]
@@ -93,13 +93,12 @@ def _norm(v):
 
 # ------------------------------------------------------------- harvest
 
-def _footer_stats(abs_path: str, cols: list[str]):
-    """Fold one parquet file's row-group stats into per-column bounds.
-    A column whose stats are missing in ANY row group yields no bound
-    (unknown ⇒ the file is never pruned on that column)."""
+def _footer_stats(src, cols: list[str]):
+    """Fold one parquet footer (path or ``FileMetaData``) into per-column
+    bounds; a column missing stats in ANY row group gets none (unknown)."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(abs_path).metadata
+    md = src if isinstance(src, pq.FileMetaData) else pq.read_metadata(src)
     if md.num_row_groups == 0:
         return {}
     rg0 = md.row_group(0)
@@ -130,28 +129,28 @@ def _footer_stats(abs_path: str, cols: list[str]):
     return out
 
 
-def harvest_file_stats(
-    spark, table_path: str, rel_paths: list[str], cols: list[str]
-) -> dict[str, dict[str, list]]:
-    """Distributed footer read over freshly-written files: returns
-    ``{rel_path: {col: [enc_min, enc_max]}}``. Metadata-only I/O — at
-    thousands of files per commit this is one short executor-side job,
-    never a driver loop over footers."""
-    if not rel_paths or not cols:
-        return {}
-    sc = spark.sparkContext
-    cols = list(cols)
-    root = table_path
+def degraded_event(phase: str, exc: BaseException, where: str = "") -> dict:
+    """A best-effort path that failed and was carried on from."""
+    what = f"{where}: " if where else ""
+    return {"phase": phase, "error": f"{what}{type(exc).__name__}: {exc}"[:500]}
 
-    def _part(paths):
-        for rel in paths:
-            try:
-                yield rel, _footer_stats(os.path.join(root, rel), cols)
-            except Exception:  # noqa: BLE001 — a stat-less file just
-                yield rel, {}  # never prunes; harvest must not fail a write
-    n = max(1, min(len(rel_paths), 64))
-    got = sc.parallelize(sorted(rel_paths), n).mapPartitions(_part).collect()
-    return {rel: st for rel, st in got if st}
+
+def read_footers(root: str, rel_paths: list[str], cols: list[str]):
+    """Driver-side footer pass: ``({rel: num_rows}, {rel: bounds},
+    degraded)``; an unreadable footer leaves its file unbounded with a
+    ``harvest.footer`` record. No threads: a pool measured 2-3x slower."""
+    import pyarrow.parquet as pq
+
+    rows, bounds, degraded = {}, {}, []
+    for rel in rel_paths:
+        try:
+            md = pq.read_metadata(os.path.join(root, rel))
+            rows[rel] = md.num_rows
+            if st := _footer_stats(md, cols):
+                bounds[rel] = st
+        except Exception as exc:  # noqa: BLE001 — must not fail a write
+            degraded.append(degraded_event("harvest.footer", exc, rel))
+    return rows, bounds, degraded
 
 
 # -------------------------------------------------------------- prune

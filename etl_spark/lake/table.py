@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from etl_spark.lake.stats import degraded_event, read_footers
+
 __all__ = ["LakeTable", "Snapshot", "MergeStats", "CommitConflict"]
 
 # Internal metadata columns stored in data files.
@@ -400,12 +402,23 @@ class MergeStats:
     manifest_key: str
     applied: bool  # False => manifest hit, no-op
     version: int
-    batch_rows: int = 0
-    distinct_keys: int = 0
     buckets_rewritten: int = 0
     buckets_total: int = 0
     rows_written: int = 0
     partitions: dict = field(default_factory=dict)  # bucket -> files/bytes/rows
+    degraded: list = field(default_factory=list)  # {"phase", "error"} per
+    #   best-effort path that failed (footer/bloom harvest, inline compaction)
+
+
+@dataclass
+class _Written:
+    """One bucket write, described by its new files' parquet footers
+    (read once on the driver, lake/stats.py::read_footers)."""
+    files: dict[int, list[str]]         # bucket -> new table-relative paths
+    lineage: dict[int, dict]            # bucket -> files/bytes/rows
+    rows: dict[str, int]                # file -> footer num_rows
+    bounds: dict[str, dict[str, list]]  # file -> zone-map bounds
+    degraded: list[dict]
 
 
 @dataclass
@@ -1321,7 +1334,6 @@ class LakeTable:
                 DEL_FLAG, guard_del_flag(F.col(DEL_FLAG), _cons))
 
         mode = snap.props.get("merge_mode", "mor")
-        coarse = snap.props.get("write_metrics", "full") == "coarse"
         if mode == "cow":
             # Control-plane job: which buckets does this batch touch?
             # (map-side-combinable distinct over <= n_buckets values). Only
@@ -1348,7 +1360,7 @@ class LakeTable:
                     rows_written=0, lineage={},
                 )
             self._publish(new_snap)
-            return MergeStats(manifest_key, True, new_snap.version, 0, 0, 0,
+            return MergeStats(manifest_key, True, new_snap.version, 0,
                               snap.n_buckets, 0)
 
         buckets = dict(snap.buckets)  # untouched buckets carried by reference
@@ -1369,10 +1381,11 @@ class LakeTable:
             merged = _folder(snap.props)(
                 aligned.unionByName(existing), key_cols, ver_cols, user_cols, types
             ).withColumn(BUCKET_COL, _route_of(snap))
-            new_files, rows_written, lineage = self._write_buckets(
-                merged, snap.version + 1, coarse_metrics=coarse,
+            w = self._write_buckets(
+                merged, snap.version + 1, snap.stats_cols(),
                 spread=self._bijection_spread(snap.id_space()),
             )
+            new_files = w.files
             if _is_patch(snap.props):
                 # CoW fold output = partial rows; keep on the resolving path
                 add_nonunique = [f for fl in new_files.values() for f in fl]
@@ -1418,10 +1431,11 @@ class LakeTable:
                 merged = _lww_rows(
                     aligned, key_cols, ver_cols, user_cols, types
                 ).withColumn(BUCKET_COL, _route_of(snap))
-            new_files, rows_written, lineage = self._write_buckets(
-                merged, snap.version + 1, coarse_metrics=coarse,
+            w = self._write_buckets(
+                merged, snap.version + 1, snap.stats_cols(),
                 spread=self._salted_spread(snap, key_cols),
             )
+            new_files = w.files
             if raw_deltas:
                 add_nonunique = [f for fl in new_files.values() for f in fl]
             for bkt, files in new_files.items():
@@ -1433,7 +1447,7 @@ class LakeTable:
         # snapshot ever pointed at them, silently dropping the merge from
         # every change feed (changes() provenance = the `added` list).
         added_files = [f for fl in new_files.values() for f in fl]
-        harvested = self._harvest_stats(snap, new_files)
+        harvested = self._harvest_stats(snap, w)
         new_snap = self._child(snap, evolved_schema, buckets, manifest_key,
                                add_nonunique=add_nonunique, added=added_files,
                                new_stats=harvested)
@@ -1445,8 +1459,8 @@ class LakeTable:
                 manifest_key=manifest_key, mode=mode,
                 schema=evolved_schema, new_files=new_files,
                 added=added_files, add_nonunique=add_nonunique,
-                new_stats=harvested, rows_written=rows_written,
-                lineage=lineage,
+                new_stats=harvested, rows_written=sum(w.rows.values()),
+                lineage=w.lineage, degraded=w.degraded,
             )
         self._publish(new_snap)
 
@@ -1479,21 +1493,18 @@ class LakeTable:
                     # a transient error just leaves the buckets for the
                     # next merge (or the maintenance job) to fold.
                     compacted_n = self.compact(buckets=to_compact)
-                except CommitConflict:
-                    compacted_n = 0
-                except Exception:  # noqa: BLE001 — deliberate best-effort
-                    compacted_n = 0
+                except Exception as exc:  # noqa: BLE001 — deliberate
+                    w.degraded.append(degraded_event("compact", exc))
 
         return MergeStats(
             manifest_key=manifest_key,
             applied=True,
             version=new_snap.version,
-            batch_rows=-1,      # not counted: extra job over the raw batch
-            distinct_keys=-1,   # not counted: extra job over the dedup output
             buckets_rewritten=len(affected) if mode == "cow" else compacted_n,
             buckets_total=snap.n_buckets,
-            rows_written=rows_written,
-            partitions=lineage,
+            rows_written=sum(w.rows.values()),
+            partitions=w.lineage,
+            degraded=w.degraded,
         )
 
     def _sort_exprs(self, snap: Snapshot, files: list[str],
@@ -1534,7 +1545,7 @@ class LakeTable:
         user_schema: StructType,
         version: int,
         expire_tombstones_before=None,
-    ) -> dict[int, list[str]]:
+    ) -> _Written:
         """Fold a bucket's base+delta files into one LWW-resolved file each.
 
         Tombstones are retained by default so late events older than an
@@ -1563,13 +1574,11 @@ class LakeTable:
         compacted = compacted.withColumn(
             BUCKET_COL, _route_of(snap)
         )
-        new_files, _, _ = self._write_buckets(
-            compacted, version, tag="c",
-            coarse_metrics=snap.props.get("write_metrics", "full") == "coarse",
+        return self._write_buckets(
+            compacted, version, snap.stats_cols(), tag="c",
             sort_cols=self._sort_exprs(snap, files, storage),
             spread=self._bijection_spread(snap.id_space()),
         )
-        return new_files
 
     def _expirable_clean_buckets(
         self, snap: Snapshot, wm, restrict: list[int] | None
@@ -1686,22 +1695,22 @@ class LakeTable:
                 snap, expire_tombstones_before, buckets))
         if not target:
             return 0
-        cfiles = self._compact_files(snap, target, snap.schema, snap.version + 1,
-                                     expire_tombstones_before)
+        w = self._compact_files(snap, target, snap.schema, snap.version + 1,
+                                expire_tombstones_before)
         merged = dict(snap.buckets)
         for b in target:
-            merged[b] = cfiles.get(b, [])
+            merged[b] = w.files.get(b, [])
         # added=[]: compaction rewrites rows, it does not change them — the
         # change feed must not re-emit its output. manifest_key=None:
         # maintenance commits stay out of the exactly-once ledger (see
         # _child) — a redundant re-compaction is wasteful, never wrong.
         # Patch tables: folded files hold PARTIAL rows (possibly several
         # per key) — they must stay on the resolving read path.
-        nonuniq_out = [f for fl in cfiles.values() for f in fl] \
+        nonuniq_out = [f for fl in w.files.values() for f in fl] \
             if _is_patch(snap.props) else []
         self._publish(self._child(snap, snap.schema, merged, None, added=[],
                                   add_nonunique=nonuniq_out,
-                                  new_stats=self._harvest_stats(snap, cfiles)))
+                                  new_stats=self._harvest_stats(snap, w)))
         return len(target)
 
     def folded_state(self, version: int | None = None) -> DataFrame:
@@ -1823,17 +1832,16 @@ class LakeTable:
             F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]),
                    F.lit(new_n_buckets)).cast("int"),
         )
-        coarse = snap.props.get("write_metrics", "full") == "coarse"
-        new_files, _, _ = self._write_buckets(
-            resolved, snap.version + 1, tag="r", coarse_metrics=coarse,
+        w = self._write_buckets(
+            resolved, snap.version + 1, snap.stats_cols(), tag="r",
             sort_cols=self._sort_exprs(snap, files, storage),
             spread=self._bijection_spread(new_n_buckets),
         )
         child = self._child(
-            snap, snap.schema, new_files, None, added=[],
-            add_nonunique=[f for fl in new_files.values() for f in fl]
+            snap, snap.schema, w.files, None, added=[],
+            add_nonunique=[f for fl in w.files.values() for f in fl]
             if _is_patch(snap.props) else (),
-            new_stats=self._harvest_stats(snap, new_files))
+            new_stats=self._harvest_stats(snap, w))
         child.n_buckets = new_n_buckets
         self._publish(child)
         return child.version
@@ -1967,7 +1975,7 @@ class LakeTable:
                 b += 1
             new_wm = b
             buckets = dict(snap.buckets)
-            new_files: dict[int, list[str]] = {}
+            harvested: dict[str, dict[str, list]] = {}
             add_nonunique: list[str] = []
             if selected:
                 files = [f for sb in selected for f in snap.buckets[sb]]
@@ -1984,26 +1992,24 @@ class LakeTable:
                     F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]),
                            F.lit(new_n)).cast("int"),
                 )
-                coarse = snap.props.get("write_metrics", "full") == "coarse"
-                new_files, _, _ = self._write_buckets(
-                    resolved, snap.version + 1, tag="s",
-                    coarse_metrics=coarse,
+                out = self._write_buckets(
+                    resolved, snap.version + 1, snap.stats_cols(), tag="s",
                     sort_cols=self._sort_exprs(snap, files, storage),
                     spread=self._bijection_spread(new_n),
                 )
                 for sb in selected:
                     del buckets[sb]
-                for cb, fl in new_files.items():
-                    buckets[cb] = fl
+                buckets.update(out.files)
                 if _is_patch(snap.props):
                     # patch fold output = PARTIAL rows, possibly several
                     # per key — children stay on the resolving read path
-                    add_nonunique = [f for fl in new_files.values()
+                    add_nonunique = [f for fl in out.files.values()
                                      for f in fl]
+                harvested = self._harvest_stats(snap, out)
             done = new_wm >= snap.n_buckets
             child = self._child(snap, snap.schema, buckets, None,
                                 added=[], add_nonunique=add_nonunique,
-                                new_stats=self._harvest_stats(snap, new_files))
+                                new_stats=harvested)
             if done:
                 child.n_buckets = new_n
                 child.rescale_to = None
@@ -2147,17 +2153,16 @@ class LakeTable:
         resolved = _folder(snap.props)(
             storage, snap.key_cols, snap.version_cols, user_cols, types
         ).withColumn(BUCKET_COL, _route_of(snap))
-        coarse = snap.props.get("write_metrics", "full") == "coarse"
-        new_files, _, _ = self._write_buckets(
-            resolved, snap.version + 1, tag="w", coarse_metrics=coarse,
+        w = self._write_buckets(
+            resolved, snap.version + 1, snap.stats_cols(), tag="w",
             sort_cols=self._sort_exprs(snap, files, storage),
             spread=self._bijection_spread(snap.id_space()),
         )
         child = self._child(
-            snap, evolved, new_files, None, added=[],
-            add_nonunique=[f for fl in new_files.values() for f in fl]
+            snap, evolved, w.files, None, added=[],
+            add_nonunique=[f for fl in w.files.values() for f in fl]
             if _is_patch(snap.props) else (),
-            new_stats=self._harvest_stats(snap, new_files))
+            new_stats=self._harvest_stats(snap, w))
         self._publish(child)
         return child.version
 
@@ -2539,17 +2544,15 @@ class LakeTable:
             F.array(*[F.lit(v) for v in pre]), unit + F.lit(1))
 
     def _write_buckets(
-        self, merged: DataFrame, version: int, tag: str = "",
-        coarse_metrics: bool = False,
+        self, merged: DataFrame, version: int, stats_cols: list[str] = (),
+        tag: str = "",
         sort_cols: list[str] | None = None,
         spread=None,
-    ) -> tuple[dict[int, list[str]], int, int]:
-        """Write per-bucket parquet files; return bucket→relative paths.
-
-        ``coarse_metrics`` skips the per-bucket row-count job (lineage then
-        reports files/bytes only, rows_written = -1) — the write-optimized
-        setting for throughput-critical CDC tails where per-commit row
-        lineage is not worth one extra (metadata-only) job per merge.
+    ) -> _Written:
+        """Write per-bucket parquet files, move them into place and read
+        each new file's footer once, on the driver: its ``num_rows`` (the
+        per-bucket lineage and ``rows_written``) and its ``stats_cols``
+        zone-map bounds. No Spark job besides the write itself.
 
         ``sort_cols`` clusters rows within each bucket file before writing
         (parquet row-group min/max stats then prune point lookups inside a
@@ -2594,21 +2597,8 @@ class LakeTable:
             .mode("overwrite")
             .parquet(staging)
         )
-        # Per-bucket row counts come from ONE distributed job over the
-        # staged output (a parquet count() is footer-metadata-only), not
-        # from driver-side per-file footer reads — at thousands of files
-        # per commit a driver loop serializes the write path.
-        has_output = any(
-            e.startswith(f"{BUCKET_COL}=") for e in os.listdir(staging)
-        )
-        bucket_rows = {
-            r[BUCKET_COL]: r["__rows"]
-            for r in self.spark.read.parquet(staging)
-            .groupBy(BUCKET_COL).agg(F.count(F.lit(1)).alias("__rows")).collect()
-        } if has_output and not coarse_metrics else {}
         new_files: dict[int, list[str]] = {}
         lineage: dict[int, dict] = {}
-        rows_written = 0
         # Publish = ONE rename per bucket directory (O(buckets), not
         # O(files)): the staged `__bucket=N` dirs move into the commit's
         # segment dir as `bNNNNN` (stripping the `name=value` shape so a
@@ -2633,49 +2623,43 @@ class LakeTable:
                         continue
                     files.append(f"{bdir_rel}/{de.name}")
                     b_bytes += de.stat().st_size
-            b_rows = -1 if coarse_metrics else int(bucket_rows.get(bkt, 0))
             new_files[bkt] = files
-            lineage[bkt] = {"files": len(files), "bytes": b_bytes, "rows": b_rows}
-            rows_written += max(b_rows, 0)
+            lineage[bkt] = {"files": len(files), "bytes": b_bytes}
         shutil.rmtree(staging, ignore_errors=True)
         if not new_files:
             shutil.rmtree(seg_abs, ignore_errors=True)
-        if coarse_metrics:
-            rows_written = -1
-        return new_files, rows_written, lineage
+        rows, bounds, degraded = read_footers(
+            self.path, [f for fl in new_files.values() for f in fl],
+            stats_cols)
+        for bkt, files in new_files.items():
+            lineage[bkt]["rows"] = sum(rows.get(f, 0) for f in files)
+        return _Written(new_files, lineage, rows, bounds, degraded)
 
-    def _harvest_stats(
-        self, snap: Snapshot, new_files: dict[int, list[str]]
-    ) -> dict[str, dict[str, list]]:
-        """Zone maps (``stats_cols``: one distributed footer-only job —
-        lake/stats.py) and Bloom filters (``bloom_cols``: one zero-shuffle
-        data pass over the new files only — lake/bloom.py) for freshly-
-        written files. Best-effort: a failed harvest must never fail the
-        committed write, it only costs pruning."""
-        if not new_files:
-            return {}
-        out: dict[str, dict[str, list]] = {}
-        rels = [f for fl in new_files.values() for f in fl]
-        cols = snap.stats_cols()
-        if cols:
-            from etl_spark.lake.stats import harvest_file_stats
-
-            try:
-                out = harvest_file_stats(self.spark, self.path, rels, cols)
-            except Exception:  # noqa: BLE001 — stats are an optimization
-                out = {}
-        for rel, entry in self._harvest_blooms(snap, rels).items():
+    def _harvest_stats(self, snap: Snapshot, w: _Written
+                       ) -> dict[str, dict[str, list]]:
+        """File metadata for a write's new files: the zone maps its
+        footer pass already folded (``stats_cols``, lake/stats.py) plus
+        Bloom filters (``bloom_cols``: one zero-shuffle data pass over
+        the new files only, lake/bloom.py)."""
+        out = {rel: dict(b) for rel, b in w.bounds.items()}
+        rels = [f for fl in w.files.values() for f in fl]
+        for rel, entry in self._harvest_blooms(
+                snap, rels, w.rows, w.degraded).items():
             out.setdefault(rel, {}).update(entry)
         return out
 
     def _harvest_blooms(
-        self, snap: Snapshot, rels: list[str]
+        self, snap: Snapshot, rels: list[str], rows: dict[str, int],
+        degraded: list[dict],
     ) -> dict[str, dict[str, list]]:
-        """Per-file blooms for the ``bloom_cols`` prop over freshly
-        written files. Tombstone rows are INCLUDED (their key values must
+        """Per-file blooms for the ``bloom_cols`` prop over ``rels``,
+        sized from their footer row counts ``rows`` under ``bloom_bits:
+        "auto"``. Tombstone rows are INCLUDED (their key values must
         keep their file unprunable so a delete can win its key's LWW);
         columns absent from the prop's validated set are skipped.
-        Best-effort like zone maps."""
+        Best-effort: a failed build must never fail the committed write,
+        it only costs pruning — it appends a ``harvest.bloom`` record to
+        ``degraded`` instead."""
         names = {f.name for f in snap.schema.fields}
         from etl_spark.lake.bloom import COMPOSITE_SEP
 
@@ -2684,7 +2668,7 @@ class LakeTable:
         if not cols or not rels:
             return {}
         from etl_spark.lake.bloom import (
-            DEFAULT_BITS, auto_bits, build_file_blooms, file_row_counts,
+            DEFAULT_BITS, auto_bits, build_file_blooms,
         )
 
         m, k = snap.bloom_shape()
@@ -2692,11 +2676,8 @@ class LakeTable:
             m_by_rel = None
             if m == "auto":
                 bpk = int(snap.props.get("bloom_bits_per_key", 10))
-                m_by_rel = {
-                    rel: auto_bits(n, bpk)
-                    for rel, n in file_row_counts(
-                        self.spark, self.path, rels).items()
-                }
+                m_by_rel = {rel: auto_bits(rows.get(rel, 0), bpk)
+                            for rel in rels}
                 m = DEFAULT_BITS
             inline_max = int(
                 snap.props.get("bloom_inline_max_bytes", 16384))
@@ -2705,7 +2686,8 @@ class LakeTable:
             return build_file_blooms(df, "__file", cols, self.path, m, k,
                                      m_by_rel=m_by_rel,
                                      inline_max=inline_max)
-        except Exception:  # noqa: BLE001 — blooms are an optimization
+        except Exception as exc:  # noqa: BLE001 — blooms are an optimization
+            degraded.append(degraded_event("harvest.bloom", exc))
             return {}
 
     def _child(
@@ -2847,8 +2829,8 @@ class LakeTable:
     def backfill_stats(self) -> int:
         """Harvest zone maps AND blooms for referenced files that predate
         ``stats_cols`` / ``bloom_cols`` (or were written while unset) and
-        commit them as a metadata-only child. Zone maps: one distributed
-        footer-only job; blooms: one zero-shuffle data pass over only the
+        commit them as a metadata-only child. Zone maps: a driver-side
+        footer pass; blooms: one zero-shuffle data pass over only the
         not-yet-covered files. Returns how many files gained entries;
         no-op without the props. Raises (rather than silently skipping)
         on a non-bloomable ``bloom_cols`` declaration — this is the
@@ -2874,12 +2856,11 @@ class LakeTable:
         ] if bcols else []
         if not missing and not bloom_missing:
             return 0
-        got: dict[str, dict[str, list]] = {}
-        if missing:
-            from etl_spark.lake.stats import harvest_file_stats
-
-            got = harvest_file_stats(self.spark, self.path, missing, cols)
-        for rel, entry in self._harvest_blooms(snap, bloom_missing).items():
+        rows, bounds, degraded = read_footers(
+            self.path, sorted(set(missing) | set(bloom_missing)), cols)
+        got = {rel: bounds[rel] for rel in missing if rel in bounds}
+        for rel, entry in self._harvest_blooms(
+                snap, bloom_missing, rows, degraded).items():
             got.setdefault(rel, {}).update(entry)
         if not got:
             return 0

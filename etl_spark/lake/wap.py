@@ -83,6 +83,7 @@ class StagedCommit:
     rows_written: int
     lineage: dict
     already_applied: bool = False
+    degraded: list = field(default_factory=list)  # MergeStats.degraded
     _done: str | None = field(default=None, repr=False)
 
     # ------------------------------------------------------------ audit
@@ -150,11 +151,10 @@ class StagedCommit:
                 self._done = "published"
                 return MergeStats(
                     manifest_key=self.manifest_key, applied=True,
-                    version=child.version, batch_rows=-1, distinct_keys=-1,
-                    buckets_rewritten=0,
+                    version=child.version, buckets_rewritten=0,
                     buckets_total=child.n_buckets,
                     rows_written=self.rows_written,
-                    partitions=self.lineage,
+                    partitions=self.lineage, degraded=self.degraded,
                 )
             except CommitConflict:
                 if attempt == max_retries:

@@ -144,7 +144,7 @@ def q_cdc_replay_final_state(spark, sf_dir):
         # write-optimized CDC-tail config (the headline bench mode):
         # deltas land as-is, read-time LWW resolves winners — identical
         # final state, fewer jobs per merge
-        table_props={"batch_dedup": "false", "write_metrics": "coarse"},
+        table_props={"batch_dedup": "false"},
     )
     return table.read().select(
         "user_id", "event_id", "ts", "event_type", "value", "props"
@@ -3579,8 +3579,7 @@ def q_cdc_patch_upsert(spark, sf_dir):
     table, _ = replay_events(
         spark, wal_dir, os.path.join(tmp, "tbl"), n_buckets=16,
         key_cols=["user_id"], version_cols=["ts", "event_id"],
-        table_props={"update_semantics": "patch",
-                     "write_metrics": "coarse"},
+        table_props={"update_semantics": "patch"},
     )
     return table.read().select(
         "user_id", "event_id", "ts", "event_type", "value", "props"
@@ -3894,7 +3893,6 @@ def q_snapshot_reconcile(spark, sf_dir):
     table, _ = replay_events(
         spark, wal_dir, os.path.join(tmp, "tbl"), n_buckets=16,
         key_cols=["user_id"], version_cols=["ts", "event_id"],
-        table_props={"write_metrics": "coarse"},
     )
     # one consistent full read of the upstream truth
     truth = (
@@ -3962,7 +3960,6 @@ def q_cdc_bootstrap_handoff(spark, sf_dir):
     table = LakeTable.create(
         spark, os.path.join(tmp, "tbl"), snapshot.schema,
         key_cols=["user_id"], version_cols=["event_id"], n_buckets=16,
-        props={"write_metrics": "coarse"},
     )
     # tail wave A → snapshot chunks → tail wave B (true interleave: the
     # bootstrap lands between live merges, LWW decides every race)
@@ -4006,13 +4003,11 @@ def q_consistent_read_group(spark, sf_dir):
         orders.select("o_orderkey", "o_custkey", "o_totalprice").schema
         .add("v", "long"),
         key_cols=["o_orderkey"], version_cols=["v"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     t_cust = LakeTable.create(
         spark, os.path.join(tmp, "customer"),
         customer.select("c_custkey", "c_mktsegment").schema.add("v", "long"),
         key_cols=["c_custkey"], version_cols=["v"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     for i in range(3):
         o = orders.filter(F.pmod("o_orderkey", F.lit(3)) == i).select(
@@ -4111,7 +4106,6 @@ def q_type_promotion_read(spark, sf_dir):
     table = LakeTable.create(
         spark, os.path.join(tmp, "tbl"), pre.drop("op").schema,
         key_cols=["user_id"], version_cols=["event_id"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     table.merge(pre, manifest_key="e:0")
     table.alter_column_type("x", LongType())  # metadata-only widening
@@ -4160,7 +4154,6 @@ def q_rename_evolution_read(spark, sf_dir):
     table = LakeTable.create(
         spark, os.path.join(tmp, "tbl"), pre.drop("op").schema,
         key_cols=["user_id"], version_cols=["event_id"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     table.merge(pre, manifest_key="e:0")
     table.alter_rename_column("x", "val")  # metadata-only rename
@@ -4216,12 +4209,10 @@ def q_spj_cobucket_join(spark, sf_dir):
     left = LakeTable.create(
         spark, os.path.join(tmp, "l"), lrows.drop("op").schema,
         key_cols=["user_id"], version_cols=["event_id"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     right = LakeTable.create(
         spark, os.path.join(tmp, "r"), rrows.drop("op").schema,
         key_cols=["user_id"], version_cols=["event_id"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     left.merge(lrows, manifest_key="l:0")
     right.merge(rrows, manifest_key="r:0")
@@ -4286,7 +4277,6 @@ def q_bucket_rescale_read(spark, sf_dir):
     t = LakeTable.create(
         spark, os.path.join(tmp, "tbl"), user, key_cols=["user_id"],
         version_cols=["ts", "event_id"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
 
     def ep(e):
@@ -4424,12 +4414,10 @@ def q_sketch_distinct_sync(spark, sf_dir):
         ev.select("event_id", "user_id", "event_type").schema
         .add("v", "long"),
         key_cols=["event_id"], version_cols=["v"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     dst = create_sketch_table(
         spark, os.path.join(tmp, "dst"),
         [StructField("event_type", StringType())], ["users"], n_buckets=4,
-        props={"write_metrics": "coarse"},
     )
     for i in range(3):
         batch = ev.filter(F.pmod("event_id", F.lit(3)) == i).select(
@@ -4454,7 +4442,6 @@ def _dml_table(spark, sf_dir, prefix):
     table = LakeTable.create(
         spark, os.path.join(tmp, "tbl"), base.drop("op").schema,
         key_cols=["user_id"], version_cols=["event_id"], n_buckets=8,
-        props={"write_metrics": "coarse"},
     )
     table.merge(base, manifest_key="e:0")
     stamp = ev.agg(F.max("event_id")).collect()[0][0] + 1

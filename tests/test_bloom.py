@@ -471,3 +471,29 @@ def test_backfill_adds_zone_maps_to_bloom_only_files(spark, tmp_root):
             assert "event_id" in snap.file_stats[f]      # zone map gained
             assert "path" + BLOOM_SUFFIX in snap.file_stats[f]  # bloom kept
     assert t.backfill_stats() == 0  # idempotent
+
+
+def test_failed_bloom_harvest_commits_and_is_recorded(
+        spark, tmp_root, monkeypatch):
+    """A bloom build that raises costs pruning, never the commit: the
+    merge publishes, and its ledger row names the ``harvest.bloom``
+    phase that degraded."""
+    from etl_spark.lake import bloom
+    from etl_spark.metrics import MetricsSink
+
+    def boom(*a, **kw):
+        raise RuntimeError("simulated bloom failure")
+
+    monkeypatch.setattr(bloom, "build_file_blooms", boom)
+    t = _mk(spark, tmp_root, "deg")
+    st = t.merge(spark.createDataFrame(_rows(0, 50, "c"),
+                                       SCHEMA + ", op string"), "e:0")
+    assert st.applied and t.read().count() == 50
+    assert not any(k.endswith(BLOOM_SUFFIX)
+                   for e in t.current_snapshot().file_stats.values()
+                   for k in e)
+    sink = MetricsSink(os.path.join(tmp_root, "ledger"))
+    sink.record(st)
+    (row,) = sink.rows()
+    assert [d["phase"] for d in row["degraded"]] == ["harvest.bloom"]
+    assert "simulated bloom failure" in row["degraded"][0]["error"]

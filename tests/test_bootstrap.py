@@ -231,3 +231,15 @@ def test_guard_rails(spark, tmp_root):
     table.alter_props({"bootstrap_floor": "a"})
     with pytest.raises(ValueError, match="in flight"):
         bootstrap_snapshot(table, snap, {"v": 1}, tag="b")
+
+
+def test_rows_loaded_is_the_row_count(spark, tmp_root):
+    """``rows_loaded`` sums the rows each applied chunk wrote: on a fresh
+    table it equals the loaded table's row count."""
+    events, cut = _history()
+    table = _mk(spark, tmp_root)
+    snapshot = _snapshot_df(spark, events, cut)
+    st = bootstrap_snapshot(table, snapshot, {"v": cut}, tag="b",
+                            n_chunks=4)
+    assert st.chunks_applied == 4
+    assert st.rows_loaded == table.read().count() == snapshot.count() > 0

@@ -233,6 +233,9 @@ def test_compaction_failure_never_fails_a_committed_merge(spark, tmp_root, monke
     monkeypatch.setattr(LT, "_compact_files", boom)
     st = t.merge(b(2), "e:2")            # must NOT raise
     assert st.applied and st.buckets_rewritten == 0
+    # ...but it leaves a structured record of the skipped compaction
+    assert [d["phase"] for d in st.degraded] == ["compact"]
+    assert "simulated compaction crash" in st.degraded[0]["error"]
     assert t.read().count() == 3         # merge itself is durable
     backlog = max(len(fl) for fl in t.current_snapshot().buckets.values())
     assert backlog == 3                  # compaction did not run
@@ -240,7 +243,7 @@ def test_compaction_failure_never_fails_a_committed_merge(spark, tmp_root, monke
     # healthy again: the next merge folds the backlog
     monkeypatch.undo()
     st = t.merge(b(3), "e:3")
-    assert st.applied and st.buckets_rewritten >= 1
+    assert st.applied and st.buckets_rewritten >= 1 and st.degraded == []
     assert max(len(fl) for fl in t.current_snapshot().buckets.values()) == 1
     assert t.read().count() == 4
 
@@ -423,6 +426,18 @@ def test_publish_is_one_rename_per_bucket_not_per_file(spark, tmp_root, monkeypa
     assert len(data_renames) == len(snap.buckets) == 2
     assert stats.rows_written == 400
     assert t.read().count() == 400
+
+    # rows_written is a footer count, true on every table: a table that
+    # still carries the retired `write_metrics=coarse` prop counts too
+    coarse = LakeTable.create(
+        spark, os.path.join(tmp_root, "pubcost_coarse"),
+        StructType([f for f in batch.schema.fields if f.name != "op"]),
+        key_cols=["repo", "path"], version_cols=["op_ts", "event_id"],
+        n_buckets=2, props={"write_metrics": "coarse"},
+    )
+    st = coarse.merge(batch, "e:0")
+    assert st.rows_written == 400 == coarse.read().count()
+    assert sum(p["rows"] for p in st.partitions.values()) == 400
 
 
 def test_rollback_restores_state_and_guards_the_feed(spark, tmp_root):

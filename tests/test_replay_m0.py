@@ -146,3 +146,45 @@ def test_delete_then_late_insert_tombstone(spark, tmp_root):
     )
     out = table.read().collect()
     assert len(out) == 1 and out[0]["content"] == "v4"
+
+
+def test_later_epoch_adds_a_column(spark, tmp_root):
+    """A column that only later WAL epochs carry evolves the table at the
+    first epoch that carries it, and that epoch's rows keep its values
+    (the WAL-root schema comes from one file, the oldest vintage)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wal = os.path.join(tmp_root, "wal")
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+
+    def land(epoch, ids, lang=None):
+        d = os.path.join(wal, f"epoch={epoch}")
+        os.makedirs(d)
+        cols = {
+            "event_id": pa.array(ids, pa.int64()),
+            "op_ts": pa.array([t0 + dt.timedelta(seconds=i) for i in ids],
+                              pa.timestamp("us", tz="UTC")),
+            "repo": ["r"] * len(ids),
+            "path": [f"p{i % 10}" for i in ids],
+            "content": [f"c{i}" for i in ids],
+            "op": ["I"] * len(ids),
+        }
+        if lang is not None:
+            cols["lang"] = [lang[i % len(lang)] for i in ids]
+        pq.write_table(pa.table(cols), os.path.join(d, "part-0.parquet"))
+
+    land(0, list(range(0, 8)))
+    land(1, list(range(8, 12)), lang=["py", "go"])
+    table, stats = replay_events(
+        spark, wal, os.path.join(tmp_root, "tbl"), n_buckets=4)
+    assert [s.applied for s in stats] == [True, True]
+    assert "lang" not in table.snapshot(stats[0].version).schema.fieldNames()
+    assert "lang" in table.snapshot(stats[1].version).schema.fieldNames()
+    got = {r["path"]: r["lang"] for r in table.read().collect()}
+    # epoch 1 rewrote p8, p9, p0, p1 (ids 8-11); the rest predate `lang`
+    assert got == {"p0": "py", "p1": "go", "p2": None, "p3": None,
+                   "p4": None, "p5": None, "p6": None, "p7": None,
+                   "p8": "py", "p9": "go"}

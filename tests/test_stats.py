@@ -268,3 +268,83 @@ def test_lookup_prunes_files_via_key_zone_maps(spark, tmp_root):
     assert [(r["path"], r["content"]) for r in got] == [("a003", "x3")]
     plan = t.scan_counts(where=[("path", "in", ["a003"])])
     assert plan == {"files_total": 2, "files_read": 1, "files_pruned": 1}
+
+
+def test_driver_footer_pass_folds_exact_bounds(tmp_root):
+    """The driver footer pass folds each column's exact [min, max] over
+    every row group for int, long, string, date, timestamp and decimal
+    columns; an all-NULL column gets no bound, and an unreadable footer
+    becomes a ``harvest.footer`` record instead of an error."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_spark.lake.stats import _footer_stats, read_footers
+
+    n = 1000
+    data = pa.table({
+        "i": pa.array([(i * 7919) % 1000 - 500 for i in range(n)], pa.int32()),
+        "l": pa.array([(i * 104729) % 10**12 for i in range(n)], pa.int64()),
+        "s": pa.array([f"k{(i * 31) % 997:04d}" for i in range(n)]),
+        "d": pa.array([dt.date(2024, 1, 1) + dt.timedelta(days=(i * 13) % 400)
+                       for i in range(n)]),
+        "ts": pa.array([T0 + dt.timedelta(seconds=(i * 37) % 86400)
+                        for i in range(n)], pa.timestamp("us")),
+        "dec": pa.array([Decimal(f"{(i * 17) % 1000}.25") for i in range(n)],
+                        pa.decimal128(9, 2)),
+        "nul": pa.array([None] * n, pa.int64()),
+    })
+    good = os.path.join(tmp_root, "good.parquet")
+    pq.write_table(data, good, row_group_size=128)
+    assert pq.read_metadata(good).num_row_groups == 8
+    with open(os.path.join(tmp_root, "bad.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+
+    cols = data.column_names
+    rows, bounds, degraded = read_footers(
+        tmp_root, ["good.parquet", "bad.parquet"], cols)
+    assert rows == {"good.parquet": n}
+    assert list(bounds) == ["good.parquet"]
+    got = {c: [decode_bound(b) for b in v]
+           for c, v in bounds["good.parquet"].items()}
+    assert set(got) == set(cols) - {"nul"}
+    for c in got:
+        vals = data.column(c).to_pylist()
+        want = [min(vals), max(vals)]
+        assert got[c] == ([float(v) for v in want] if c == "dec" else want), c
+    # the same fold a per-file read of the path gives
+    assert bounds["good.parquet"] == _footer_stats(good, cols)
+    assert [d["phase"] for d in degraded] == ["harvest.footer"]
+    assert degraded[0]["error"].startswith("bad.parquet: ")
+
+
+def test_stats_only_merge_harvests_without_a_spark_job(
+        spark, tmp_root, monkeypatch):
+    """Zone maps come from the write's own footer pass: harvesting a
+    ``stats_cols``-only table starts zero Spark jobs (a bloom table,
+    whose harvest is a data pass, shows the probe does see jobs)."""
+    sc = spark.sparkContext
+    real = LakeTable._harvest_stats
+    jobs: list[int] = []
+
+    def probed(self, snap, written):
+        group = f"harvest-probe-{len(jobs)}-{id(written)}"
+        sc.setJobGroup(group, "harvest probe")
+        try:
+            return real(self, snap, written)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    monkeypatch.setattr(LakeTable, "_harvest_stats", probed)
+    t = _mk(spark, tmp_root, "nojob")
+    _waves(spark, t, n_waves=2)
+    assert jobs == []
+    snap = t.current_snapshot()
+    files = [f for fl in snap.buckets.values() for f in fl]
+    assert files and all("op_ts" in snap.file_stats[f] for f in files)
+
+    b = _mk(spark, tmp_root, "bloomjob", props={"bloom_cols": "path"})
+    _waves(spark, b, n_waves=1)
+    assert jobs

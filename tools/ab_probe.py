@@ -41,7 +41,7 @@ sample = spark.read.parquet(wal)
 user = StructType([f for f in sample.schema.fields if f.name not in ("op", "epoch")])
 file_schema = StructType([f for f in sample.schema.fields if f.name != "epoch"])
 
-base = {{"batch_dedup": "false", "write_metrics": "coarse"}}
+base = {{"batch_dedup": "false"}}
 wtbl = LakeTable.create(spark, os.path.join(scratch, "warm"), user,
                         ["repo", "path"], ["op_ts", "event_id"], n_buckets=8,
                         props=base)

@@ -44,7 +44,7 @@ def main() -> None:
             synth_events(spark, events, n_repos=2000, paths_per_repo=2000,
                          n_epochs=epochs, seed=42, partitions=32), wal)
         # un-compacted CDC tail: every epoch leaves its delta files in place
-        base = {"batch_dedup": "false", "write_metrics": "coarse",
+        base = {"batch_dedup": "false",
                 "compact_threshold": str(10 * epochs)}
         tables = {}
         # COMPOSITE entry: per-column blooms measured useless here (~85%

@@ -77,7 +77,7 @@ def main() -> None:
                 spark, os.path.join(scratch, name),
                 synth(1, 1).drop("op").schema,
                 key_cols=["repo", "path"], version_cols=["event_id"],
-                n_buckets=n_buckets, props={"write_metrics": "coarse"})
+                n_buckets=n_buckets)
             t.merge(synth(rows, 3), manifest_key="base:0")
             t.compact()
             return t

@@ -87,7 +87,7 @@ user = StructType([f for f in sample.schema.fields if f.name not in ("op", "epoc
 # JVM). The warmup is excluded from timing at BOTH levels.
 wtbl = LakeTable.create(spark, os.path.join(scratch, "warm"), user,
                         ["repo", "path"], ["op_ts", "event_id"], n_buckets=64,
-                        props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                        props={{"batch_dedup": "false"}})
 wtbl.merge(spark.read.parquet(os.path.join(wal, "epoch=0")), "warm")
 import shutil as _sh
 _sh.rmtree(os.path.join(scratch, "warm"), ignore_errors=True)
@@ -97,7 +97,7 @@ for r in range({reps}):
     tpath = os.path.join(scratch, f"tbl{{r}}")
     tbl = LakeTable.create(spark, tpath, user, ["repo", "path"],
                            ["op_ts", "event_id"], n_buckets=64,
-                           props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                           props={{"batch_dedup": "false"}})
     file_schema = StructType(
         [f for f in sample.schema.fields if f.name != "epoch"])
 

@@ -82,12 +82,12 @@ def main() -> None:
             spark, os.path.join(scratch, "l"),
             synth(1, 1, "size").drop("op").schema,
             key_cols=["repo", "path"], version_cols=["event_id"],
-            n_buckets=n_buckets, props={"write_metrics": "coarse"})
+            n_buckets=n_buckets)
         rt = LakeTable.create(
             spark, os.path.join(scratch, "r"),
             synth(1, 1, "stars").drop("op").schema,
             key_cols=["repo", "path"], version_cols=["event_id"],
-            n_buckets=n_buckets, props={"write_metrics": "coarse"})
+            n_buckets=n_buckets)
         for i in range(merges):
             lt.merge(synth(rows_l, 3 + 2 * i, "size"),
                      manifest_key=f"l:{i}")

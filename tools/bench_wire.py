@@ -101,7 +101,7 @@ def main() -> None:
                            + list(pschema.fields)),
                 key_cols=["repo", "path"], version_cols=["op_ts", "seq"],
                 n_buckets=buckets,
-                props={"batch_dedup": "false", "write_metrics": "coarse"},
+                props={"batch_dedup": "false"},
             )
             wire = spark.read.text(wire_dir)
             good, _bad = parse_envelopes(wire, pschema)

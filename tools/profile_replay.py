@@ -58,7 +58,7 @@ user = StructType([f for f in sample.schema.fields if f.name not in ("op", "epoc
 
 wtbl = LakeTable.create(spark, os.path.join(scratch, "warm"), user,
                         ["repo", "path"], ["op_ts", "event_id"], n_buckets=8,
-                        props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                        props={{"batch_dedup": "false"}})
 wtbl.merge(spark.read.parquet(os.path.join(wal, "epoch=0")).limit(20000), "warm")
 
 out = {{"cpus": cpus}}
@@ -66,7 +66,7 @@ out = {{"cpus": cpus}}
 # ---- floor: 5 near-empty merges through the full 64-bucket path ----
 ftbl = LakeTable.create(spark, os.path.join(scratch, "floor"), user,
                         ["repo", "path"], ["op_ts", "event_id"], n_buckets=64,
-                        props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                        props={{"batch_dedup": "false"}})
 tiny = spark.read.parquet(os.path.join(wal, "epoch=0")).limit(2000)
 tiny = tiny.localCheckpoint()  # exclude source read from the floor
 floors = []
@@ -80,7 +80,7 @@ out["floor_per_merge_s"] = floors
 tpath = os.path.join(scratch, "tbl")
 tbl = LakeTable.create(spark, tpath, user, ["repo", "path"],
                        ["op_ts", "event_id"], n_buckets=64,
-                       props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                       props={{"batch_dedup": "false"}})
 epochs = []
 t_all = time.monotonic()
 for e in range({epochs}):

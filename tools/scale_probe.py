@@ -45,7 +45,7 @@ file_schema = StructType([f for f in sample.schema.fields if f.name != "epoch"])
 
 wtbl = LakeTable.create(spark, os.path.join(scratch, "warm"), user,
                         ["repo", "path"], ["op_ts", "event_id"], n_buckets=8,
-                        props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                        props={{"batch_dedup": "false"}})
 wtbl.merge(spark.read.parquet(os.path.join(wal, "epoch=0")).limit(20000), "warm")
 
 import glob
@@ -80,7 +80,7 @@ for r in range({reps}):
     tpath = os.path.join(scratch, f"tbl{{r}}")
     tbl = LakeTable.create(spark, tpath, user, ["repo", "path"],
                            ["op_ts", "event_id"], n_buckets=64,
-                           props={{"batch_dedup": "false", "write_metrics": "coarse"}})
+                           props={{"batch_dedup": "false"}})
     trace.clear()
     th = threading.Thread(target=sampler, daemon=True); th.start()
     epochs_out = []
