@@ -4,9 +4,10 @@ A from-scratch re-expression of the capabilities of ImpulsoGov/etl
 (reference at /root/reference, read-only) on Apache Spark:
 
 - ``etl_spark.lake``       — ACID lake-table format on parquet (snapshots,
-                             atomic commits, bucket-pruned copy-on-write
-                             MERGE, additive schema evolution, time travel,
-                             exactly-once commit manifests).
+                             atomic commits, merge-on-read MERGE with
+                             threshold compaction, additive schema
+                             evolution, time travel, exactly-once commit
+                             manifests).
 - ``etl_spark.cdc``        — WAL/binlog event model keyed ``(repo, path)``,
                              last-writer-wins dedup, batch + streaming replay,
                              deterministic synthetic event source, naive

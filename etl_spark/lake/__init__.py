@@ -5,8 +5,8 @@ implements the minimal subset of an Iceberg-style table format it needs,
 from scratch, on plain parquet + JSON snapshots:
 
 - atomic snapshot commits (optimistic concurrency via exclusive link),
-- bucket-pruned copy-on-write MERGE (last-writer-wins upserts + tombstoned
-  deletes),
+- merge-on-read MERGE (last-writer-wins upserts + tombstoned deletes as
+  delta files, folded by threshold compaction),
 - additive schema evolution,
 - time travel (read any retained snapshot),
 - exactly-once commit manifests keyed by caller-supplied manifest keys

@@ -20,11 +20,13 @@ on local[32]):
   of all events still spreads across all buckets, so no single MERGE task
   becomes the straggler. (The reference's analogue is per-UF/municipality
   work splitting, /root/reference/src/impulsoetl/utilitarios/repetidores.py:23-87.)
-* **MERGE = bucket-pruned copy-on-write.** A change batch only rewrites the
-  buckets its keys hash into; untouched buckets are carried into the new
-  snapshot by reference. At 100 TB the rewrite amplification is bounded by
-  (batch keys / n_buckets coverage), and each bucket merges independently —
-  one shuffle on the key, no global sort.
+* **MERGE = merge-on-read deltas + threshold compaction.** A change batch
+  is written as delta files appended to the buckets its keys hash into;
+  every other file is carried into the new snapshot by reference, so a
+  merge costs O(batch), not O(table) — one shuffle on the bucket, no
+  global sort. Reads resolve per-key LWW winners across a bucket's files;
+  once a bucket holds more than ``compact_threshold`` delta generations,
+  a follow-up commit folds it back into one file.
 * **Exactly-once.** Every merge carries a ``manifest_key``; the snapshot
   records the set of applied keys. Re-applying an already-committed batch is
   a metadata no-op (the reference's ``capturas_historico`` ledger +
@@ -291,7 +293,7 @@ def _patch_rows(df, key_cols, ver_cols, user_cols, types):
 
 
 def _patch_fold(df, key_cols, ver_cols, user_cols, types):
-    """Semantic FOLD for patch tables (compaction / rebucket / CoW): N
+    """Semantic FOLD for patch tables (compaction / rebucket / rescale): N
     delta rows per key collapse to at most (distinct column-winner
     versions) + 1 retained tombstone + 1 latest-version marker PARTIAL
     rows — never one materialized total row.
@@ -345,9 +347,11 @@ def _patch_fold(df, key_cols, ver_cols, user_cols, types):
             F.lit(deleted).alias(DEL_FLAG),
         ))
 
+    # a marker older than the tombstone is dead like any column winner;
+    # kept, it would resurrect the key once tombstone expiry drops dv
     cands = [
         cand(dv, None, True, dv.isNotNull()),
-        cand(lv, None, False, lv.isNotNull()),
+        cand(lv, None, False, lv.isNotNull() & (dv.isNull() | (lv > dv))),
     ]
     for c in payload_cols:
         w = F.col(f"__w_{c}")
@@ -374,23 +378,21 @@ def _patch_fold(df, key_cols, ver_cols, user_cols, types):
     return folded.select(*user_cols, F.col(DEL_FLAG).alias(META_DELETED))
 
 
+def _is_patch(props: dict) -> bool:
+    return props.get("update_semantics", "row") == "patch"
+
+
 def _resolver(props: dict):
     """The read-time resolution aggregate this table's update semantics
     demand: row-LWW (default) or per-column patch-LWW."""
-    return _patch_rows if props.get("update_semantics", "row") == "patch" \
-        else _lww_rows
+    return _patch_rows if _is_patch(props) else _lww_rows
 
 
 def _folder(props: dict):
-    """The REWRITE fold (compaction / rebucket / CoW): row tables
+    """The REWRITE fold (compaction / rebucket / rescale): row tables
     materialize total winner rows; patch tables fold to partial rows that
     preserve per-column winner versions (see :func:`_patch_fold`)."""
-    return _patch_fold if props.get("update_semantics", "row") == "patch" \
-        else _lww_rows
-
-
-def _is_patch(props: dict) -> bool:
-    return props.get("update_semantics", "row") == "patch"
+    return _patch_fold if _is_patch(props) else _lww_rows
 
 
 class CommitConflict(RuntimeError):
@@ -663,12 +665,12 @@ class LakeTable:
         n_buckets: int = 32,
         props: dict[str, str] | None = None,
     ) -> "LakeTable":
+        if n_buckets < 1:
+            raise ValueError("n_buckets must be >= 1")
         path = os.path.abspath(path)
         snap_dir = os.path.join(path, _SNAP_DIR)
         if os.path.exists(snap_dir) and os.listdir(snap_dir):
             raise FileExistsError(f"table already exists at {path}")
-        os.makedirs(snap_dir, exist_ok=True)
-        os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
         missing = [c for c in key_cols + version_cols if c not in schema.fieldNames()]
         if missing:
             raise ValueError(f"key/version columns not in schema: {missing}")
@@ -683,6 +685,8 @@ class LakeTable:
             raise ValueError(
                 f"update_semantics must be 'row' or 'patch', got "
                 f"{props['update_semantics']!r}")
+        os.makedirs(snap_dir, exist_ok=True)
+        os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
         table = LakeTable(spark, path)
         snap = Snapshot(
             version=0,
@@ -1212,7 +1216,6 @@ class LakeTable:
             return StagedCommit(
                 table=self, parent_version=snap.version, snapshot=snap,
                 manifest_key=manifest_key,
-                mode=snap.props.get("merge_mode", "mor"),
                 schema=snap.schema, new_files={}, added=[],
                 add_nonunique=[], new_stats={}, rows_written=0,
                 lineage={}, already_applied=True,
@@ -1333,120 +1336,58 @@ class LakeTable:
             aligned = aligned.withColumn(
                 DEL_FLAG, guard_del_flag(F.col(DEL_FLAG), _cons))
 
-        mode = snap.props.get("merge_mode", "mor")
-        if mode == "cow":
-            # Control-plane job: which buckets does this batch touch?
-            # (map-side-combinable distinct over <= n_buckets values). Only
-            # CoW needs this up front — it decides which buckets to rewrite.
-            affected = sorted(
-                r[BUCKET_COL] for r in aligned.select(BUCKET_COL).distinct().collect()
+        # Merge-on-read: write only the batch as delta files — O(batch) per
+        # merge, not O(table). Readers resolve per-key winners across
+        # base+delta files; buckets whose delta GENERATION count (distinct
+        # commit segments) crosses the threshold are compacted below, as a
+        # follow-up commit.
+        #
+        # props["batch_dedup"]="false" (write-optimized) skips the
+        # batch-local LWW aggregate: read-time LWW is authoritative
+        # anyway, so dropping the agg removes one shuffle per merge.
+        # Worth it when batches are mostly key-unique (typical CDC
+        # tail); keep the default dedup when batches churn few hot
+        # keys (the agg then shrinks the delta files dramatically).
+        #
+        # PATCH tables always land raw: a batch-local fold to one row
+        # per key cannot represent "delete, then set column A" (the
+        # delete's reset of every OTHER column would be lost against
+        # older on-disk state), and a row-LWW fold would drop earlier
+        # partial rows outright. Raw deltas + read-time _patch_rows
+        # are authoritative; batch_dedup is inert under patch.
+        raw_deltas = (snap.props.get("batch_dedup", "true") == "false"
+                      or _is_patch(snap.props))
+        if raw_deltas:
+            is_del = F.col(DEL_FLAG)
+            merged = aligned.select(
+                *[
+                    (F.when(is_del, F.lit(None).cast(types[c]))
+                     .otherwise(F.col(c)).alias(c)
+                     if c not in key_cols + ver_cols else F.col(c))
+                    for c in user_cols
+                ],
+                is_del.alias(META_DELETED),
+                F.col(BUCKET_COL),
             )
         else:
-            # MoR appends only the files actually written; claiming every
-            # bucket as "affected" costs nothing (empty appends are dropped)
-            # and saves a full scan of the batch per merge.
-            affected = list(range(snap.id_space()))
-        if not affected:
-            new_snap = self._child(snap, evolved_schema, snap.buckets, manifest_key,
-                                   added=[])
-            if stage_only:
-                from etl_spark.lake.wap import StagedCommit
-
-                return StagedCommit(
-                    table=self, parent_version=snap.version,
-                    snapshot=new_snap, manifest_key=manifest_key,
-                    mode=mode, schema=evolved_schema, new_files={},
-                    added=[], add_nonunique=[], new_stats={},
-                    rows_written=0, lineage={},
-                )
-            self._publish(new_snap)
-            return MergeStats(manifest_key, True, new_snap.version, 0,
-                              snap.n_buckets, 0)
-
+            merged = _lww_rows(
+                aligned, key_cols, ver_cols, user_cols, types
+            ).withColumn(BUCKET_COL, _route_of(snap))
+        w = self._write_buckets(
+            merged, snap.version + 1, snap.stats_cols(),
+            spread=self._salted_spread(snap, key_cols),
+        )
+        added_files = [f for fl in w.files.values() for f in fl]
+        add_nonunique = added_files if raw_deltas else []
         buckets = dict(snap.buckets)  # untouched buckets carried by reference
-        compacted_n = 0
-        add_nonunique: list[str] = []
-
-        if mode == "cow":
-            # Copy-on-write: rewrite every affected bucket. Existing rows
-            # re-enter the LWW aggregate as change events (a tombstone is a
-            # delete at its stored version) — ONE combinable hash aggregate
-            # over (existing ∪ batch), no join, no windows; a hot key costs
-            # one combine per upstream partition.
-            existing_files = [f for b in affected for f in snap.buckets.get(b, [])]
-            existing = self._read_files(snap, existing_files, user_schema=evolved_schema)
-            existing = existing.select(
-                *user_cols, F.col(META_DELETED).alias(DEL_FLAG)
-            ).withColumn(BUCKET_COL, _route_of(snap))
-            merged = _folder(snap.props)(
-                aligned.unionByName(existing), key_cols, ver_cols, user_cols, types
-            ).withColumn(BUCKET_COL, _route_of(snap))
-            w = self._write_buckets(
-                merged, snap.version + 1, snap.stats_cols(),
-                spread=self._bijection_spread(snap.id_space()),
-            )
-            new_files = w.files
-            if _is_patch(snap.props):
-                # CoW fold output = partial rows; keep on the resolving path
-                add_nonunique = [f for fl in new_files.values() for f in fl]
-            for bkt in affected:
-                buckets[bkt] = new_files.get(bkt, [])
-        else:
-            # Merge-on-read: write only the batch as delta files — O(batch)
-            # per merge, not O(table). Readers resolve per-key winners
-            # across base+delta files; buckets whose delta GENERATION
-            # count (distinct commit segments) crosses the threshold are
-            # compacted below, as a follow-up commit.
-            #
-            # props["batch_dedup"]="false" (write-optimized) skips the
-            # batch-local LWW aggregate: read-time LWW is authoritative
-            # anyway, so dropping the agg removes one shuffle per merge.
-            # Worth it when batches are mostly key-unique (typical CDC
-            # tail); keep the default dedup when batches churn few hot
-            # keys (the agg then shrinks the delta files dramatically).
-            #
-            # PATCH tables always land raw: a batch-local fold to one row
-            # per key cannot represent "delete, then set column A" (the
-            # delete's reset of every OTHER column would be lost against
-            # older on-disk state), and a row-LWW fold would drop earlier
-            # partial rows outright. Raw deltas + read-time _patch_rows
-            # are authoritative; batch_dedup is inert under patch.
-            raw_deltas = (
-                snap.props.get("batch_dedup", "true") == "false"
-                or snap.props.get("update_semantics", "row") == "patch"
-            )
-            if raw_deltas:
-                is_del = F.col(DEL_FLAG)
-                merged = aligned.select(
-                    *[
-                        (F.when(is_del, F.lit(None).cast(types[c]))
-                         .otherwise(F.col(c)).alias(c)
-                         if c not in key_cols + ver_cols else F.col(c))
-                        for c in user_cols
-                    ],
-                    is_del.alias(META_DELETED),
-                    F.col(BUCKET_COL),
-                )
-            else:
-                merged = _lww_rows(
-                    aligned, key_cols, ver_cols, user_cols, types
-                ).withColumn(BUCKET_COL, _route_of(snap))
-            w = self._write_buckets(
-                merged, snap.version + 1, snap.stats_cols(),
-                spread=self._salted_spread(snap, key_cols),
-            )
-            new_files = w.files
-            if raw_deltas:
-                add_nonunique = [f for fl in new_files.values() for f in fl]
-            for bkt, files in new_files.items():
-                buckets[bkt] = buckets.get(bkt, []) + files
+        for bkt, files in w.files.items():
+            buckets[bkt] = buckets.get(bkt, []) + files
 
         # The merge commit publishes FIRST; threshold compaction runs as a
         # separate follow-up commit below. Folding compaction into the same
         # snapshot would de-reference this merge's delta files before any
         # snapshot ever pointed at them, silently dropping the merge from
         # every change feed (changes() provenance = the `added` list).
-        added_files = [f for fl in new_files.values() for f in fl]
         harvested = self._harvest_stats(snap, w)
         new_snap = self._child(snap, evolved_schema, buckets, manifest_key,
                                add_nonunique=add_nonunique, added=added_files,
@@ -1456,51 +1397,50 @@ class LakeTable:
 
             return StagedCommit(
                 table=self, parent_version=snap.version, snapshot=new_snap,
-                manifest_key=manifest_key, mode=mode,
-                schema=evolved_schema, new_files=new_files,
+                manifest_key=manifest_key,
+                schema=evolved_schema, new_files=w.files,
                 added=added_files, add_nonunique=add_nonunique,
                 new_stats=harvested, rows_written=sum(w.rows.values()),
                 lineage=w.lineage, degraded=w.degraded,
             )
         self._publish(new_snap)
 
-        if mode != "cow":
-            threshold = int(snap.props.get("compact_threshold", "6"))
-            # read-amplification metric = delta GENERATIONS (distinct
-            # commit segments, the v…-tok path component), not raw files:
-            # the rebalanced write may split one hot bucket into several
-            # files within a single merge, which adds write parallelism
-            # but no per-key resolution depth — counting files would make
-            # every skewed merge trigger a full-bucket rewrite
-            to_compact = [
-                b for b in buckets
-                if len({f.split("/", 2)[1] for f in buckets[b]}) > threshold
-                # pending-rescale buckets are left for their migration
-                # step, which LWW-folds them anyway — auto-compacting
-                # first would pay the same rewrite twice (the planner
-                # applies the same skip; an EXPLICIT compact(buckets=...)
-                # still rewrites them, e.g. purge's payload scrub cannot
-                # wait for the watermark)
-                and not (snap.rescale_to is not None
-                         and snap.rescale_watermark <= b < snap.n_buckets)
-            ]
-            if to_compact:
-                try:
-                    # Best-effort maintenance: the merge above is already
-                    # durably committed, so NO compaction failure may
-                    # surface as a merge failure (the caller would wrongly
-                    # retry/abort a succeeded merge). A lost commit race or
-                    # a transient error just leaves the buckets for the
-                    # next merge (or the maintenance job) to fold.
-                    compacted_n = self.compact(buckets=to_compact)
-                except Exception as exc:  # noqa: BLE001 — deliberate
-                    w.degraded.append(degraded_event("compact", exc))
+        threshold = int(snap.props.get("compact_threshold", "6"))
+        # read-amplification metric = delta GENERATIONS (distinct commit
+        # segments, the v…-tok path component), not raw files: the
+        # rebalanced write may split one hot bucket into several files
+        # within a single merge, which adds write parallelism but no
+        # per-key resolution depth — counting files would make every
+        # skewed merge trigger a full-bucket rewrite
+        to_compact = [
+            b for b in buckets
+            if len({f.split("/", 2)[1] for f in buckets[b]}) > threshold
+            # pending-rescale buckets are left for their migration step,
+            # which LWW-folds them anyway — auto-compacting first would
+            # pay the same rewrite twice (the planner applies the same
+            # skip; an EXPLICIT compact(buckets=...) still rewrites them,
+            # e.g. purge's payload scrub cannot wait for the watermark)
+            and not (snap.rescale_to is not None
+                     and snap.rescale_watermark <= b < snap.n_buckets)
+        ]
+        compacted_n = 0
+        if to_compact:
+            try:
+                # Best-effort maintenance: the merge above is already
+                # durably committed, so NO compaction failure may surface
+                # as a merge failure (the caller would wrongly retry/abort
+                # a succeeded merge). A lost commit race or a transient
+                # error just leaves the buckets for the next merge (or the
+                # maintenance job) to fold.
+                compacted_n = self.compact(buckets=to_compact)
+            except Exception as exc:  # noqa: BLE001 — deliberate
+                w.degraded.append(degraded_event("compact", exc))
 
         return MergeStats(
             manifest_key=manifest_key,
             applied=True,
             version=new_snap.version,
-            buckets_rewritten=len(affected) if mode == "cow" else compacted_n,
+            buckets_rewritten=compacted_n,
             buckets_total=snap.n_buckets,
             rows_written=sum(w.rows.values()),
             partitions=w.lineage,
@@ -1538,47 +1478,66 @@ class LakeTable:
         z = zorder_key(snap.schema, {c: bounds[c] for c in cluster}, bits)
         return [z] + [c for c in snap.key_cols if c not in cluster]
 
-    def _compact_files(
+    def _fold(self, snap: Snapshot, files: list[str],
+              schema: StructType | None = None) -> tuple[DataFrame, DataFrame]:
+        """The semantic fold of ``files`` under ``snap``'s update
+        semantics (:func:`_folder`): ``(storage, folded)``, where
+        ``storage`` is the raw read projected to ``schema``'s columns —
+        each cast to its type there (``schema`` defaults to the
+        snapshot's; a differing type is a widening rewrite) — plus
+        ``DEL_FLAG``, and ``folded`` is its LWW fold (user columns +
+        ``META_DELETED``)."""
+        schema = snap.schema if schema is None else schema
+        user_cols = [f.name for f in schema.fields]
+        types = {f.name: f.dataType for f in schema.fields}
+        storage = self._read_files(snap, files).select(
+            *[F.col(c).cast(types[c]).alias(c) for c in user_cols],
+            F.col(META_DELETED).alias(DEL_FLAG),
+        )
+        return storage, _folder(snap.props)(
+            storage, snap.key_cols, snap.version_cols, user_cols, types)
+
+    def _fold_rewrite(
         self,
         snap: Snapshot,
-        bucket_files: dict[int, list[str]],
-        user_schema: StructType,
-        version: int,
+        files: list[str],
+        route,
+        n: int,
+        tag: str,
+        schema: StructType | None = None,
         expire_tombstones_before=None,
-    ) -> _Written:
-        """Fold a bucket's base+delta files into one LWW-resolved file each.
+    ) -> tuple[_Written, list[str]]:
+        """Rewrite ``files`` as their fold (:meth:`_fold`) — the one
+        write path of compaction, rebucket, a rescale step and a widening
+        rewrite. Output rows go to bucket ``route`` (a column expression
+        over ``[0, n)``) through the collision-free bijection spread,
+        each bucket file sorted by :meth:`_sort_exprs`. Returns the write
+        and the new files a reader must keep resolving: a patch fold
+        emits PARTIAL rows, possibly several per key (:func:`_patch_fold`),
+        so all its output is ``nonunique``; row-LWW output is not.
 
         Tombstones are retained by default so late events older than an
-        applied delete still lose after compaction. With
+        applied delete still lose after the rewrite. With
         ``expire_tombstones_before`` (an event-time watermark on
         ``version_cols[0]``), tombstones older than the watermark are
         dropped — valid under the bounded-lateness contract that no event
         older than the watermark can still arrive (the streaming-watermark
         analogue; reference: monthly re-capture horizon)."""
-        user_cols = [f.name for f in user_schema.fields]
-        types = {f.name: f.dataType for f in user_schema.fields}
-        files = [f for fl in bucket_files.values() for f in fl]
-        storage = self._read_files(snap, files, user_schema=user_schema)
-        storage = storage.select(*user_cols, F.col(META_DELETED).alias(DEL_FLAG))
-        # row tables materialize total winner rows; patch tables fold to
-        # partial rows preserving per-column winner versions (_patch_fold
-        # docstring: materializing would let late events resurrect values)
-        compacted = _folder(snap.props)(
-            storage, snap.key_cols, snap.version_cols, user_cols, types
-        )
+        storage, folded = self._fold(snap, files, schema)
         if expire_tombstones_before is not None:
             ts_col = snap.version_cols[0]
-            compacted = compacted.filter(
-                ~(F.col(META_DELETED) & (F.col(ts_col) < F.lit(expire_tombstones_before)))
-            )
-        compacted = compacted.withColumn(
-            BUCKET_COL, _route_of(snap)
-        )
-        return self._write_buckets(
-            compacted, version, snap.stats_cols(), tag="c",
+            folded = folded.filter(~(
+                F.col(META_DELETED)
+                & (F.col(ts_col) < F.lit(expire_tombstones_before))))
+        w = self._write_buckets(
+            folded.withColumn(BUCKET_COL, route), snap.version + 1,
+            snap.stats_cols(), tag=tag,
             sort_cols=self._sort_exprs(snap, files, storage),
-            spread=self._bijection_spread(snap.id_space()),
+            spread=self._bijection_spread(n),
         )
+        nonunique = [f for fl in w.files.values() for f in fl] \
+            if _is_patch(snap.props) else []
+        return w, nonunique
 
     def _expirable_clean_buckets(
         self, snap: Snapshot, wm, restrict: list[int] | None
@@ -1695,8 +1654,10 @@ class LakeTable:
                 snap, expire_tombstones_before, buckets))
         if not target:
             return 0
-        w = self._compact_files(snap, target, snap.schema, snap.version + 1,
-                                expire_tombstones_before)
+        w, nonunique = self._fold_rewrite(
+            snap, [f for fl in target.values() for f in fl],
+            _route_of(snap), snap.id_space(), "c",
+            expire_tombstones_before=expire_tombstones_before)
         merged = dict(snap.buckets)
         for b in target:
             merged[b] = w.files.get(b, [])
@@ -1704,12 +1665,8 @@ class LakeTable:
         # change feed must not re-emit its output. manifest_key=None:
         # maintenance commits stay out of the exactly-once ledger (see
         # _child) — a redundant re-compaction is wasteful, never wrong.
-        # Patch tables: folded files hold PARTIAL rows (possibly several
-        # per key) — they must stay on the resolving read path.
-        nonuniq_out = [f for fl in w.files.values() for f in fl] \
-            if _is_patch(snap.props) else []
         self._publish(self._child(snap, snap.schema, merged, None, added=[],
-                                  add_nonunique=nonuniq_out,
+                                  add_nonunique=nonunique,
                                   new_stats=self._harvest_stats(snap, w)))
         return len(target)
 
@@ -1730,15 +1687,8 @@ class LakeTable:
         wrongly in the replica — exactly the hazard ``_patch_fold``
         documents for compaction. Idempotent over already-folded files."""
         snap = self.snapshot(version)
-        user_cols = [f.name for f in snap.schema.fields]
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        files = [f for fl in snap.buckets.values() for f in fl]
-        storage = self._read_files(snap, files).select(
-            *user_cols, F.col(META_DELETED).alias(DEL_FLAG)
-        )
-        return _folder(snap.props)(
-            storage, snap.key_cols, snap.version_cols, user_cols, types
-        )
+        return self._fold(
+            snap, [f for fl in snap.buckets.values() for f in fl])[1]
 
     def rollback(self, to_version: int) -> int:
         """Restore the table's DATA to snapshot ``to_version`` as a NEW
@@ -1817,31 +1767,13 @@ class LakeTable:
                 f"{snap.n_buckets}); drive it to completion with "
                 f"rescale_step() before an atomic rebucket"
             )
-        files = [f for fl in snap.buckets.values() for f in fl]
-        user_cols = [f.name for f in snap.schema.fields]
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        storage = self._read_files(snap, files).select(
-            *user_cols, F.col(META_DELETED).alias(DEL_FLAG)
-        )
-        # resolve LWW while we are rewriting anyway (free compaction);
-        # patch tables fold to partial rows instead (see _patch_fold)
-        resolved = _folder(snap.props)(
-            storage, snap.key_cols, snap.version_cols, user_cols, types
-        ).withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]),
-                   F.lit(new_n_buckets)).cast("int"),
-        )
-        w = self._write_buckets(
-            resolved, snap.version + 1, snap.stats_cols(), tag="r",
-            sort_cols=self._sort_exprs(snap, files, storage),
-            spread=self._bijection_spread(new_n_buckets),
-        )
-        child = self._child(
-            snap, snap.schema, w.files, None, added=[],
-            add_nonunique=[f for fl in w.files.values() for f in fl]
-            if _is_patch(snap.props) else (),
-            new_stats=self._harvest_stats(snap, w))
+        # resolve LWW while we are rewriting anyway (free compaction)
+        w, nonunique = self._fold_rewrite(
+            snap, [f for fl in snap.buckets.values() for f in fl],
+            _bucket_of(snap.key_cols, new_n_buckets), new_n_buckets, "r")
+        child = self._child(snap, snap.schema, w.files, None, added=[],
+                            add_nonunique=nonunique,
+                            new_stats=self._harvest_stats(snap, w))
         child.n_buckets = new_n_buckets
         self._publish(child)
         return child.version
@@ -1978,33 +1910,12 @@ class LakeTable:
             harvested: dict[str, dict[str, list]] = {}
             add_nonunique: list[str] = []
             if selected:
-                files = [f for sb in selected for f in snap.buckets[sb]]
-                user_cols = [f.name for f in snap.schema.fields]
-                types = {f.name: f.dataType for f in snap.schema.fields}
-                storage = self._read_files(snap, files).select(
-                    *user_cols, F.col(META_DELETED).alias(DEL_FLAG)
-                )
-                resolved = _folder(snap.props)(
-                    storage, snap.key_cols, snap.version_cols, user_cols,
-                    types,
-                ).withColumn(
-                    BUCKET_COL,
-                    F.pmod(F.xxhash64(*[F.col(c) for c in snap.key_cols]),
-                           F.lit(new_n)).cast("int"),
-                )
-                out = self._write_buckets(
-                    resolved, snap.version + 1, snap.stats_cols(), tag="s",
-                    sort_cols=self._sort_exprs(snap, files, storage),
-                    spread=self._bijection_spread(new_n),
-                )
+                out, add_nonunique = self._fold_rewrite(
+                    snap, [f for sb in selected for f in snap.buckets[sb]],
+                    _bucket_of(snap.key_cols, new_n), new_n, "s")
                 for sb in selected:
                     del buckets[sb]
                 buckets.update(out.files)
-                if _is_patch(snap.props):
-                    # patch fold output = PARTIAL rows, possibly several
-                    # per key — children stay on the resolving read path
-                    add_nonunique = [f for fl in out.files.values()
-                                     for f in fl]
                 harvested = self._harvest_stats(snap, out)
             done = new_wm >= snap.n_buckets
             child = self._child(snap, snap.schema, buckets, None,
@@ -2115,56 +2026,37 @@ class LakeTable:
                             True)
                 for f in snap.schema.fields
             ])
-            try:
-                if pair in self._READ_WIDENINGS:
-                    child = self._child(snap, evolved, snap.buckets, None,
-                                        added=[])
-                    self._publish(child)
-                    return child.version
-                if pair in self._REWRITE_WIDENINGS:
-                    if not rewrite:
-                        raise ValueError(
-                            f"{old_s} -> {new_s} is not read-convertible "
-                            f"by parquet: pass rewrite=True to accept the "
-                            f"one-time O(table) rewrite"
-                        )
-                    return self._rewrite_widened(snap, col, evolved)
+            if pair in self._READ_WIDENINGS:
+                child = self._child(snap, evolved, snap.buckets, None,
+                                    added=[])
+            elif pair in self._REWRITE_WIDENINGS:
+                if not rewrite:
+                    raise ValueError(
+                        f"{old_s} -> {new_s} is not read-convertible "
+                        f"by parquet: pass rewrite=True to accept the "
+                        f"one-time O(table) rewrite"
+                    )
+                # one-time full rewrite casting ``col``, rebucket's shape
+                # at the same bucket count: bucket placement never involves
+                # non-key columns, so every row stays in its bucket
+                w, nonunique = self._fold_rewrite(
+                    snap, [f for fl in snap.buckets.values() for f in fl],
+                    _route_of(snap), snap.id_space(), "w", schema=evolved)
+                child = self._child(snap, evolved, w.files, None, added=[],
+                                    add_nonunique=nonunique,
+                                    new_stats=self._harvest_stats(snap, w))
+            else:
                 raise ValueError(
                     f"unsupported promotion {old_s} -> {new_s}: only "
                     f"value-preserving widenings are allowed"
                 )
+            try:
+                self._publish(child)
+                return child.version
             except CommitConflict:
                 if attempt == max_retries:
                     raise
         raise AssertionError("unreachable")
-
-    def _rewrite_widened(self, snap: "Snapshot", col: str,
-                         evolved: StructType) -> int:
-        """One-time full rewrite casting ``col`` (rebucket's shape, same
-        bucket count — bucket placement never involves non-key columns,
-        so every row stays in its bucket)."""
-        files = [f for fl in snap.buckets.values() for f in fl]
-        user_cols = [f.name for f in snap.schema.fields]
-        types = {f.name: f.dataType for f in evolved.fields}
-        storage = self._read_files(snap, files).select(
-            *[F.col(c).cast(types[c]).alias(c) for c in user_cols],
-            F.col(META_DELETED).alias(DEL_FLAG),
-        )
-        resolved = _folder(snap.props)(
-            storage, snap.key_cols, snap.version_cols, user_cols, types
-        ).withColumn(BUCKET_COL, _route_of(snap))
-        w = self._write_buckets(
-            resolved, snap.version + 1, snap.stats_cols(), tag="w",
-            sort_cols=self._sort_exprs(snap, files, storage),
-            spread=self._bijection_spread(snap.id_space()),
-        )
-        child = self._child(
-            snap, evolved, w.files, None, added=[],
-            add_nonunique=[f for fl in w.files.values() for f in fl]
-            if _is_patch(snap.props) else (),
-            new_stats=self._harvest_stats(snap, w))
-        self._publish(child)
-        return child.version
 
     def alter_drop_column(self, col: str, max_retries: int = 3) -> int:
         """Drop a payload column as a METADATA-ONLY commit (Iceberg
@@ -2505,9 +2397,7 @@ class LakeTable:
         16. Under stationary CDC skew (hot repos stay hot — the north-star
         workload) the stored distribution predicts the batch's; the first
         merge into an empty table and the no-skew case run the plain
-        bijection. ``merge_balance="plain"`` opts out entirely."""
-        if snap.props.get("merge_balance", "salted") != "salted":
-            return None
+        bijection."""
         n = snap.id_space()
         sizes = {b: self._stored_bytes(fl)
                  for b, fl in snap.buckets.items()}
@@ -2547,7 +2437,8 @@ class LakeTable:
         self, merged: DataFrame, version: int, stats_cols: list[str] = (),
         tag: str = "",
         sort_cols: list[str] | None = None,
-        spread=None,
+        *,
+        spread,
     ) -> _Written:
         """Write per-bucket parquet files, move them into place and read
         each new file's footer once, on the driver: its ``num_rows`` (the
@@ -2568,8 +2459,8 @@ class LakeTable:
         seg_abs = os.path.join(self.path, seg_rel)
         staging = seg_abs + ".stage"
         # spread = (num_partitions, partition_key): the collision-free
-        # bucket→task bijection (optionally salted for hot buckets — see
-        # _bijection_spread / _salted_spread). Measured alternatives at
+        # bucket→task bijection (salted for hot buckets on the merge path
+        # — see _bijection_spread / _salted_spread). Measured alternatives at
         # 64M events, all rejected: plain repartition(bucket) stacks up to
         # 8 near-equal buckets (1.96x mean bytes) in one task; AQE
         # REBALANCE by bucket balances local[8] well (-16% wall) but
@@ -2578,10 +2469,7 @@ class LakeTable:
         # cores, file count scaling with splits x buckets; blind 2x
         # over-partitioning balances nearly as well but costs +14% cpu in
         # shuffle-stream overhead and still collides.
-        if spread is not None:
-            shaped = merged.repartition(spread[0], spread[1])
-        else:
-            shaped = merged.repartition(F.col(BUCKET_COL))
+        shaped = merged.repartition(spread[0], spread[1])
         if sort_cols:
             # BUCKET_COL must LEAD the ordering: FileFormatWriter requires
             # task rows sorted by the dynamic-partition columns and inserts
@@ -2989,9 +2877,7 @@ class LakeTable:
         merge whose deltas are compacted away by a LATER commit still
         appears in the feed — the files stay referenced by the merge's own
         snapshot until ``expire_snapshots`` drops it, which is the bound on
-        how far back a change feed can start. (Under copy-on-write the
-        added files are whole rewritten buckets, so the feed
-        over-approximates; use MoR for change feeds.)
+        how far back a change feed can start.
 
         With ``batch_dedup=false`` (write-optimized) deltas land raw, so
         the feed may carry several versions of a key per range; every row
@@ -3051,8 +2937,8 @@ class LakeTable:
     def vacuum(self, older_than_sec: float = 600.0,
                reclaim_staging: bool = False) -> list[str]:
         """Delete data files referenced by no remaining snapshot (run after
-        ``expire_snapshots``; compaction and CoW merges leave such
-        orphans). Returns deleted table-relative paths.
+        ``expire_snapshots``; compaction and the other rewrites leave
+        such orphans). Returns deleted table-relative paths.
 
         ``older_than_sec`` is the concurrency grace window (Iceberg's
         ``remove_orphan_files`` retention): a file a concurrent writer just

@@ -30,13 +30,12 @@ Guarantees:
   referenced them, so readers never saw them and the ledger never
   recorded the manifest key — a re-capture with the same key starts
   from zero.
-- **Concurrency.** A merge-on-read staged commit REBASES past writers
-  that committed while the audit ran (its files are pure appends to
-  their buckets — the same reasoning as a merge retry); the prepared
-  fast path applies when nothing intervened. A copy-on-write staged
-  commit cannot rebase (its files are full bucket rewrites that would
-  drop the concurrent changes) and raises ``CommitConflict`` — re-stage
-  against the new state.
+- **Concurrency.** A staged commit REBASES past writers that committed
+  while the audit ran (its files are pure appends to their buckets — the
+  same reasoning as a merge retry); the prepared fast path applies when
+  nothing intervened. Only a bucket-layout change in between (rebucket,
+  rescale) refuses the rebase with ``CommitConflict`` — re-stage against
+  the new layout.
 - **Crash during audit.** Nothing was committed; the staged files are
   unreferenced orphans and ``vacuum`` reclaims them after its grace
   window (so audit within that window, or raise it).
@@ -74,7 +73,6 @@ class StagedCommit:
     parent_version: int
     snapshot: Snapshot          # prepared child (parent_version + 1)
     manifest_key: str
-    mode: str                   # "mor" | "cow"
     schema: StructType          # evolved user schema at stage time
     new_files: dict[int, list[str]]
     added: list[str]
@@ -110,13 +108,6 @@ class StagedCommit:
                 return MergeStats(self.manifest_key, False, cur.version)
             if cur.version == self.parent_version:
                 child = self.snapshot  # prepared fast path
-            elif self.mode == "cow":
-                raise CommitConflict(
-                    f"staged copy-on-write commit {self.manifest_key!r} "
-                    f"cannot rebase past concurrent commits "
-                    f"(parent v{self.parent_version}, now v{cur.version}) "
-                    f"— abort and re-stage"
-                )
             elif (cur.n_buckets != self.snapshot.n_buckets
                   or cur.rescale_to != self.snapshot.rescale_to
                   or cur.rescale_watermark != self.snapshot.rescale_watermark):

@@ -1,11 +1,12 @@
-"""LakeTable merge modes: merge-on-read (default) vs copy-on-write parity,
-auto/explicit compaction, and additive schema evolution under MoR."""
+"""LakeTable merges: merge-on-read deltas against the sequential-replay
+oracle, auto/explicit compaction, and additive schema evolution."""
 
 from __future__ import annotations
 
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.cdc import synth_events, write_event_epochs
@@ -24,7 +25,7 @@ def _state(table) -> pd.DataFrame:
     )
 
 
-def test_mor_equals_cow_equals_oracle(spark, tmp_root):
+def test_mor_equals_oracle(spark, tmp_root):
     events_dir = os.path.join(tmp_root, "wal")
     ev = synth_events(spark, 3000, n_repos=25, paths_per_repo=25, n_epochs=6)
     write_event_epochs(ev, events_dir)
@@ -34,11 +35,11 @@ def test_mor_equals_cow_equals_oracle(spark, tmp_root):
     sample = spark.read.parquet(events_dir)
     user = StructType([f for f in sample.schema.fields if f.name not in ("op", "epoch")])
 
-    def replay(mode: str, threshold: str) -> LakeTable:
+    def replay(name: str, props: dict) -> LakeTable:
         t = LakeTable.create(
-            spark, os.path.join(tmp_root, f"tbl_{mode}_{threshold}"), user,
+            spark, os.path.join(tmp_root, f"tbl_{name}"), user,
             key_cols=["repo", "path"], version_cols=["op_ts", "event_id"],
-            n_buckets=8, props={"merge_mode": mode, "compact_threshold": threshold},
+            n_buckets=8, props=props,
         )
         for e in range(6):
             t.merge(spark.read.parquet(os.path.join(events_dir, f"epoch={e}")),
@@ -46,16 +47,18 @@ def test_mor_equals_cow_equals_oracle(spark, tmp_root):
         return t
 
     want = oracle_final_state(events_dir).reset_index(drop=True)
-    cow = replay("cow", "999")
-    mor = replay("mor", "3")          # compaction triggers mid-replay
-    mor_nc = replay("mor", "999")     # never compacts: pure merge-on-read
+    mor = replay("mor", {"compact_threshold": "3"})   # compacts mid-replay
+    mor_nc = replay("nc", {"compact_threshold": "999"})  # pure merge-on-read
+    # a table created when merge_mode still existed: the prop is ignored
+    legacy = replay("legacy", {"merge_mode": "cow", "compact_threshold": "3"})
 
-    for t in (cow, mor, mor_nc):
+    for t in (mor, mor_nc, legacy):
         pd.testing.assert_frame_equal(_state(t), want, check_dtype=False)
 
-    # compaction actually ran for mor (file counts bounded)
-    snap = mor.current_snapshot()
-    assert max(len(fl) for fl in snap.buckets.values()) <= 4
+    # merges appended deltas and compaction ran (file counts bounded)
+    for t in (mor, legacy):
+        snap = t.current_snapshot()
+        assert max(len(fl) for fl in snap.buckets.values()) <= 4
     snap_nc = mor_nc.current_snapshot()
     assert max(len(fl) for fl in snap_nc.buckets.values()) == 6
 
@@ -64,6 +67,23 @@ def test_mor_equals_cow_equals_oracle(spark, tmp_root):
     assert n > 0
     assert max(len(fl) for fl in mor_nc.current_snapshot().buckets.values()) == 1
     pd.testing.assert_frame_equal(_state(mor_nc), want, check_dtype=False)
+
+
+def test_create_refuses_bad_layout_before_writing(spark, tmp_root):
+    """A zero or negative bucket count has no bucket to route a row to:
+    a merge would commit its manifest key with no rows. create refuses
+    it, like an unknown key column, before anything is written."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL("k bigint, v bigint")
+    for name, kw in (("zero", {"n_buckets": 0}),
+                     ("negative", {"n_buckets": -3}),
+                     ("unknown_key", {"key_cols": ["nope"]})):
+        path = os.path.join(tmp_root, name)
+        with pytest.raises(ValueError, match="n_buckets|not in schema"):
+            LakeTable.create(spark, path, schema, **{
+                "key_cols": ["k"], "version_cols": ["v"], **kw})
+        assert not os.path.exists(path), name
 
 
 def test_schema_evolution_mor(spark, tmp_root):
@@ -230,7 +250,7 @@ def test_compaction_failure_never_fails_a_committed_merge(spark, tmp_root, monke
     def boom(*a, **kw):
         raise RuntimeError("simulated compaction crash")
 
-    monkeypatch.setattr(LT, "_compact_files", boom)
+    monkeypatch.setattr(LT, "_fold_rewrite", boom)
     st = t.merge(b(2), "e:2")            # must NOT raise
     assert st.applied and st.buckets_rewritten == 0
     # ...but it leaves a structured record of the skipped compaction

@@ -2,9 +2,9 @@
 PER-COLUMN LWW — partial-image CDC rows where NULL payload means "keep the
 previous value" (Debezium-style feeds; reference: per-field REST detail
 re-capture over previously captured records). Covers read-time resolution,
-tombstone resets, compaction materialization, CoW parity, schema
-evolution, in-batch sequences, and a seeded randomized parity sweep
-against a sequential-apply pandas model."""
+tombstone resets, compaction materialization, compacted-vs-delta parity,
+tombstone expiry, schema evolution, in-batch sequences, and a seeded
+randomized parity sweep against a sequential-apply pandas model."""
 
 from __future__ import annotations
 
@@ -136,20 +136,36 @@ def test_patch_schema_evolution_mid_feed(spark, tmp_root):
     assert got == {1: ("alice", 5, "x")}
 
 
-def test_cow_patch_parity(spark, tmp_root):
+def test_patch_compacting_and_delta_parity(spark, tmp_root):
     rows = [
         [(1, 10, 1, "a", 1, "I"), (2, 10, 2, "b", 2, "I")],
         [(1, 20, 3, None, 9, "U"), (2, 20, 4, "b2", None, "U")],
         [(2, 30, 5, None, None, "D"), (1, 30, 6, "a3", None, "U")],
         [(2, 40, 7, None, 5, "U")],
     ]
-    mor = _table(spark, tmp_root, "t6m", {"compact_threshold": "2"})
-    cow = _table(spark, tmp_root, "t6c", {"merge_mode": "cow"})
+    folded = _table(spark, tmp_root, "t6m", {"compact_threshold": "2"})
+    deltas = _table(spark, tmp_root, "t6d", {"compact_threshold": "999"})
     for i, batch in enumerate(rows):
-        _merge(spark, mor, f"m{i}", batch)
-        _merge(spark, cow, f"m{i}", batch)
-    assert _state(mor) == _state(cow) == {
+        _merge(spark, folded, f"m{i}", batch)
+        _merge(spark, deltas, f"m{i}", batch)
+    assert _state(folded) == _state(deltas) == {
         1: (30, 6, "a3", 9), 2: (40, 7, None, 5)}
+
+
+def test_patch_tombstone_expiry_does_not_resurrect(spark, tmp_root):
+    """Expiring the tombstone of a deleted key drops the key: the fold
+    must not keep the pre-delete version marker, which would otherwise
+    surface as an all-NULL row once the tombstone is gone."""
+    for name, props in (("row", {"update_semantics": "row"}),
+                        ("patch", {})):
+        t = _table(spark, tmp_root, f"t13{name}",
+                   {"compact_threshold": "999", **props})
+        _merge(spark, t, "m0", [(1, 10, 1, "x", 5, "I"),
+                                (2, 10, 2, "y", 6, "I")])
+        _merge(spark, t, "m1", [(1, 20, 3, None, None, "D")])
+        t.compact(expire_tombstones_before=100)
+        assert _state(t) == {2: (10, 2, "y", 6)}, name
+        assert t.read(include_deleted=True).count() == 1, name
 
 
 def test_inbatch_delete_then_patch_single_merge(spark, tmp_root):
@@ -202,7 +218,7 @@ def _model(events):
 
 
 @pytest.mark.parametrize("extra", [{"compact_threshold": "3"},
-                                   {"merge_mode": "cow"}])
+                                   {"compact_threshold": "999"}])
 def test_randomized_parity_vs_sequential_model(spark, tmp_root, extra):
     rng = random.Random(42)
     events = []
@@ -215,7 +231,7 @@ def test_randomized_parity_vs_sequential_model(spark, tmp_root, extra):
             a = f"s{rng.randrange(50)}" if rng.random() < 0.55 else None
             b = rng.randrange(100) if rng.random() < 0.55 else None
             events.append((k, ts, seq, a, b, "U"))
-    t = _table(spark, tmp_root, f"t10_{'cow' in str(extra)}", extra)
+    t = _table(spark, tmp_root, f"t10_{extra['compact_threshold']}", extra)
     shuffled = events[:]
     rng.shuffle(shuffled)          # arrival order != version order
     n = 5

@@ -218,7 +218,7 @@ def test_crash_before_publish_leaves_consistent_table(spark, tmp_root):
         "event_id", "op_ts", "repo", "path", "content",
         F.lit(False).alias(META_DELETED),
     ).withColumn(BUCKET_COL, _bucket_of(["repo", "path"], 2))
-    t._write_buckets(merged, snap.version + 1)
+    t._write_buckets(merged, snap.version + 1, spread=t._bijection_spread(2))
 
     assert "e0" not in t.applied_manifests()      # nothing committed
     st = t.merge(batch, "e0")                      # clean re-apply

@@ -4,9 +4,9 @@ Pins: the staged read is the post-merge state while the base table is
 untouched; publish commits the SAME staged files (zero rewrite) and
 claims the manifest key exactly once; a failing audit leaves the table
 byte-identical (same snapshot, same bytes on disk, key unclaimed) and a
-re-capture then succeeds; abort deletes the staged segment; MoR staged
-commits rebase past concurrent writers, CoW ones refuse; an audit crash
-never leaks staged files.
+re-capture then succeeds; abort deletes the staged segment; staged
+commits rebase past concurrent writers; an audit crash never leaks
+staged files.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from etl_spark.lake import CommitConflict, LakeTable, audit_capture
+from etl_spark.lake import LakeTable, audit_capture
 from etl_spark.pipeline import ValidationError, expect
 
 SCHEMA = StructType([
@@ -146,23 +146,6 @@ def test_mor_staged_commit_rebases_past_concurrent_writer(spark, tmp_root):
     assert {100, 200} <= got  # both waves survive
     snap = t.current_snapshot()
     assert snap.has_applied("w:r1") and snap.has_applied("w:r2")
-
-
-def test_cow_staged_commit_refuses_rebase(spark, tmp_root):
-    t = _mk(spark, tmp_root, props={"merge_mode": "cow"})
-    staged = t.merge_staged(spark.createDataFrame(
-        [("I", 100, 2, 1)], ROWS), manifest_key="w:c1")
-    t.merge(spark.createDataFrame([("I", 200, 2, 2)], ROWS),
-            manifest_key="w:c2")
-    with pytest.raises(CommitConflict, match="re-stage"):
-        staged.publish()
-    staged.abort()
-    assert 100 not in {r["k"] for r in t.read().collect()}
-    # fresh stage against the new state succeeds
-    st = t.merge_staged(spark.createDataFrame(
-        [("I", 100, 3, 1)], ROWS), manifest_key="w:c1").publish()
-    assert st.applied
-    assert {100, 200} <= {r["k"] for r in t.read().collect()}
 
 
 def test_staged_schema_evolution_and_feed_visibility(spark, tmp_root):
