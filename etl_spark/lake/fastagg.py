@@ -1,5 +1,5 @@
 """Metadata-accelerated aggregates: ``COUNT(*)`` / ``MIN`` / ``MAX``
-answered from parquet footers instead of a table scan.
+answered from snapshot metadata instead of a table scan.
 
 Iceberg answers ``SELECT count(*)`` from manifest row counts and
 min/max from column bounds in the manifest; Trino and Spark both push
@@ -18,8 +18,11 @@ tiers that is PROVABLY exact for it:
    boolean column statistics prove it all-live (``max == false``):
    every stored row is its key's final LWW winner, so the footer's
    ``num_rows`` / per-column min-max ARE that bucket's contribution.
-   Zero data I/O; one short executor-side sweep over footers (same job
-   shape as the zone-map harvest, lake/stats.py).
+   Both were read at commit time: the row count and tombstone state
+   from the snapshot's file record (``Snapshot.file_records``), the
+   bounds from its zone maps. No Spark job; a driver footer read
+   (lake/stats.py::read_footers) only for min/max columns outside
+   ``stats_cols`` and for files written before the records.
 2. **column-scan tier** — a clean file that provably holds tombstones
    (mixed ``_deleted`` stats) or whose stats are unreadable: scan ONLY
    the needed columns of ONLY those files (for a count that is one
@@ -44,10 +47,8 @@ form (the zone-map convention, lake/stats.py::_norm).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from etl_spark.lake.table import META_DELETED
 
@@ -72,63 +73,35 @@ def _plan(snap) -> tuple[list[str], list[int]]:
     return sorted(clean), sorted(dirty)
 
 
-def _sweep(spark, root: str, rels: list[str], cols: list[str]):
-    """Executor-side footer sweep: for each file, its row count, its
-    tombstone state proven from the ``_deleted`` boolean column
-    statistics (``live`` / ``dead`` / ``mixed`` / ``unknown``), and —
-    for files proven live — decoded min/max bounds for ``cols`` where
-    the footer can supply them completely."""
-    if not rels:
-        return []
+def _records(table, snap, rels: list[str], cols: list[str]):
+    """For each clean file: ``(rel, rows, state, bounds)`` with its row
+    count and tombstone state from its file record and, for files proven
+    live, decoded min/max bounds for ``cols`` where the zone maps (else
+    one driver footer pass, lake/stats.py::read_footers) supply them
+    completely. A file with no record (written before records, or
+    unreadable) reads as ``unknown``: it falls to a scan."""
+    from etl_spark.lake.stats import decode_bound
 
-    def _part(it):
-        import pyarrow.parquet as pq
+    def stored(rel):
+        e = snap.file_stats.get(rel, {})
+        return {c: e[c] for c in cols if c in e}
 
-        from etl_spark.lake.stats import _footer_stats, decode_bound
-
-        for rel in it:
-            p = os.path.join(root, rel)
-            try:
-                md = pq.ParquetFile(p).metadata
-            except Exception:  # noqa: BLE001 — unreadable footer: the
-                yield (rel, None, "unknown", {})  # file falls to a scan
-                continue
-            if md.num_rows == 0 or md.num_row_groups == 0:
-                yield (rel, 0, "dead", {})
-                continue
-            rg0 = md.row_group(0)
-            di = None
-            for i in range(rg0.num_columns):
-                if rg0.column(i).path_in_schema == META_DELETED:
-                    di = i
-                    break
-            state = "unknown"
-            if di is not None:
-                has_true = has_false = False
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(di).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    has_true = has_true or bool(st.max)
-                    has_false = has_false or not bool(st.min)
-                if ok:
-                    state = ("mixed" if has_true and has_false
-                             else "dead" if has_true else "live")
-            bounds = {}
-            if state == "live" and cols:
-                try:
-                    raw = _footer_stats(p, list(cols))
-                except Exception:  # noqa: BLE001 — stats-less: scan
-                    raw = {}
-                bounds = {c: [decode_bound(v[0]), decode_bound(v[1])]
-                          for c, v in raw.items()}
-            yield (rel, int(md.num_rows), state, bounds)
-
-    sc = spark.sparkContext
-    n = max(1, min(len(rels), 64))
-    return sc.parallelize(sorted(rels), n).mapPartitions(_part).collect()
+    bounds_for = [
+        rel for rel in rels
+        if (rec := snap.file_records.get(rel)) is not None
+        and rec["state"] == "live" and len(stored(rel)) < len(cols)
+    ]
+    recs, fresh = table._file_records(snap, rels, cols, bounds_for)
+    for rel in rels:
+        rec = recs.get(rel)
+        if rec is None:
+            yield rel, None, "unknown", {}
+            continue
+        got = {**stored(rel), **fresh.get(rel, {})} \
+            if rec["state"] == "live" else {}
+        yield rel, rec["rows"], rec["state"], {
+            c: [decode_bound(v[0]), decode_bound(v[1])]
+            for c, v in got.items()}
 
 
 def _scan_live(table, snap, rels: list[str], cols: list[str]):
@@ -139,10 +112,8 @@ def _scan_live(table, snap, rels: list[str], cols: list[str]):
     (a plain explicit-schema read would silently aggregate NULLs for
     both, under-reporting extremes)."""
     fields = [f for f in snap.schema.fields if f.name in cols]
-    from pyspark.sql.types import StructType as _St
-
     return (
-        table._read_files(snap, rels, user_schema=_St(fields))
+        table._read_files(snap, rels, user_schema=StructType(fields))
         .filter(~F.col(META_DELETED))
         .drop(META_DELETED)
     )
@@ -156,8 +127,8 @@ def fast_count(table, version: int | str | None = None
     permits. Returns ``(count, breakdown)`` where the breakdown reports
     how much of the table each tier answered:
     ``files_footer / files_scanned / buckets_resolved / patch_fallback``.
-    A fully-compacted, tombstone-expired table costs one footer sweep
-    and reads zero data bytes."""
+    A fully-compacted, tombstone-expired table is answered from its file
+    records alone: no Spark job, no file opened."""
     snap = table.snapshot(version)
     if snap.props.get("update_semantics", "row") == "patch":
         n = table._read_snap(snap).count()
@@ -168,7 +139,7 @@ def fast_count(table, version: int | str | None = None
     total = 0
     scan: list[str] = []
     footer = 0
-    for rel, n, state, _ in _sweep(table.spark, table.path, clean, []):
+    for rel, n, state, _ in _records(table, snap, clean, []):
         if state == "live":
             total += n
             footer += 1
@@ -229,7 +200,7 @@ def fast_min_max(table, cols: list[str],
     defaults = {c: d for c, d in snap.default_map().items() if c in cols}
     scan: list[str] = []
     footer = 0
-    for rel, n, state, bounds in _sweep(table.spark, table.path, clean, cols):
+    for rel, n, state, bounds in _records(table, snap, clean, cols):
         if state == "dead":
             footer += 1
         elif defaults and state != "dead" and any(

@@ -22,14 +22,19 @@ Metadata plane (driver-side, O(files) dict work, zero data I/O):
   reference files the snapshot holds; applied-ledger keys unique and
   watermark ranges ordered.
 
-Physical plane (one executor-side footer sweep, the same distributed
-metadata-only job shape as ``meta("files")`` — still zero DATA I/O):
+Physical plane (one executor-side footer sweep, metadata-only — still
+zero DATA I/O; the engine's only executor footer job, because checking
+the physical files is its purpose):
 
 - every referenced data file exists and its parquet footer is readable;
 - every bloom sidecar pointer resolves to an existing sidecar file;
 - stored zone-map bounds agree with the file's OWN footer statistics
   (the bounds are derived from footers at harvest time, so a mismatch
-  means the file was replaced or the snapshot forged).
+  means the file was replaced or the snapshot forged);
+- the file record (``Snapshot.file_records``: rows, bytes, row groups,
+  tombstone state — what ``meta("files")``, ``fast_count`` and the
+  planners trust without opening the file) agrees with the file's own
+  footer and on-disk size.
 
 Deep plane (``deep=True`` — O(table) data scan, schedule like a full
 compaction):
@@ -93,14 +98,14 @@ def _meta_findings(snap) -> dict[str, list]:
 
 def _physical_findings(table, snap) -> dict[str, list]:
     """One executor-side sweep over (file, bucket, expectations):
-    existence, footer readability, sidecar pointers, zone-map bounds vs
-    the file's own footer statistics. The bound check re-runs the exact
-    harvest code (lake/stats._footer_stats) against the file as it is
-    NOW and compares the encoded values verbatim — stored bounds came
-    from that same function at write time, so any drift means the bytes
-    under the snapshot changed."""
+    existence, footer readability, sidecar pointers, zone-map bounds and
+    the file record vs the file's own footer. The bound and record
+    checks re-run the exact harvest code (lake/stats._footer_stats and
+    file_record) against the file as it is NOW and compare verbatim —
+    the stored values came from those same functions at write time, so
+    any drift means the bytes under the snapshot changed."""
     stats_cols = [c for c in snap.stats_cols()]
-    work = []  # (rel, bucket, {col: [enc_min, enc_max]}, [sidecar rels])
+    work = []  # (rel, bucket, {col: [enc_min, enc_max]}, [sidecars], record)
     for b, fl in snap.buckets.items():
         for f in fl:
             entry = snap.file_stats.get(f, {})
@@ -109,9 +114,10 @@ def _physical_findings(table, snap) -> dict[str, list]:
             sidecars = [v[0][1:] for k, v in entry.items()
                         if k.endswith("#bloom") and isinstance(v[0], str)
                         and v[0].startswith("@")]
-            work.append((f, b, bounds, sidecars))
+            work.append((f, b, bounds, sidecars, snap.file_records.get(f)))
     out: dict[str, list] = {"missing_files": [], "corrupt_footers": [],
-                            "missing_sidecars": [], "stats_mismatches": []}
+                            "missing_sidecars": [], "stats_mismatches": [],
+                            "record_mismatches": []}
     if not work:
         return out
 
@@ -119,44 +125,42 @@ def _physical_findings(table, snap) -> dict[str, list]:
     cols = list(stats_cols)
 
     def _part(it):
-        from etl_spark.lake.stats import _footer_stats
-        for rel, b, bounds, sidecars in it:
+        import pyarrow.parquet as pq
+
+        from etl_spark.lake.stats import _footer_stats, file_record
+        for rel, b, bounds, sidecars, record in it:
             p = os.path.join(root, rel)
+            at = {"file": rel, "bucket": b}
             if not os.path.isfile(p):
-                yield ("missing_file", rel, b, None)
+                yield "missing_files", at
                 continue
             try:
                 # always opens the footer — corruption surfaces even on
                 # files with no zone-mapped columns
-                fresh = _footer_stats(p, cols)
+                md = pq.read_metadata(p)
+                fresh = _footer_stats(md, cols)
             except Exception as exc:  # noqa: BLE001 — that IS the finding
-                yield ("corrupt_footer", rel, b, str(exc)[:200])
+                yield "corrupt_footers", {**at, "error": str(exc)[:200]}
                 continue
+            actual = file_record(md, os.path.getsize(p))
+            if record is not None and actual != record:
+                yield "record_mismatches", {
+                    **at, "detail": f"stored {record!r} vs file {actual!r}"}
             for sc in sidecars:
                 if not os.path.isfile(os.path.join(root, sc)):
-                    yield ("missing_sidecar", rel, b, sc)
+                    yield "missing_sidecars", {**at, "sidecar": sc}
             for col, stored in bounds.items():
                 now = fresh.get(col)  # [enc_min, enc_max] dicts — the
                 # snapshot's value is the same structure JSON-round-tripped
                 if now != list(stored):
-                    yield ("stats_mismatch", rel, b,
-                           f"{col}: stored {stored!r} vs footer {now!r}")
+                    yield "stats_mismatches", {**at, "detail": (
+                        f"{col}: stored {stored!r} vs footer {now!r}")}
 
     sc = table.spark.sparkContext
     n = max(1, min(len(work), 64))
-    for kind, rel, b, extra in (
+    for kind, finding in (
             sc.parallelize(work, n).mapPartitions(_part).collect()):
-        if kind == "missing_file":
-            out["missing_files"].append({"file": rel, "bucket": b})
-        elif kind == "corrupt_footer":
-            out["corrupt_footers"].append(
-                {"file": rel, "bucket": b, "error": extra})
-        elif kind == "missing_sidecar":
-            out["missing_sidecars"].append(
-                {"file": rel, "bucket": b, "sidecar": extra})
-        else:
-            out["stats_mismatches"].append(
-                {"file": rel, "bucket": b, "detail": extra})
+        out[kind].append(finding)
     return out
 
 

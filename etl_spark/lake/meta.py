@@ -6,11 +6,11 @@ Why this is an operator, not a debug helper: every ops question a 100 TB
 deployment asks daily — "how many delta files is bucket 17 carrying",
 "which commit added these rows", "what is pinned and by whom", "is the
 exactly-once ledger where I think it is" — is a QUERY over metadata, and
-the answers must come from the metadata plane alone (snapshot JSON +
-parquet footers), never from scanning data. The reference answers the
-same questions against Postgres catalogs and its capture-history table
-(`capturas_*`, scripts/geral.py:92-109); here they are DataFrames you
-join, filter and aggregate like any other table.
+the answers must come from the metadata plane alone (the snapshot JSON
+and the file records in it), never from scanning data. The reference
+answers the same questions against Postgres catalogs and its
+capture-history table (`capturas_*`, scripts/geral.py:92-109); here they
+are DataFrames you join, filter and aggregate like any other table.
 
 Kinds
 -----
@@ -20,13 +20,13 @@ Kinds
   Driver-side: the snapshot log is O(retained versions), already the
   thing ``expire_snapshots`` bounds.
 - ``files`` — one row per data file of one snapshot: bucket, row count,
-  bytes, row groups. Footer reads run EXECUTOR-side, one metadata-only
-  job over the whole table: a query over every live file, unlike the
-  per-commit driver footer pass (lake/stats.py::read_footers) that
-  reads only a write's new files.
+  bytes, row groups, from the file records the commit wrote
+  (``Snapshot.file_records``): no Spark job, no file opened. A file
+  written before the records is read once on the driver
+  (lake/stats.py::read_footers); if that fails (a vanished or corrupt
+  file) its row shows NULLs. ``fsck`` checks records against the files.
 - ``partitions`` — ``files`` aggregated per bucket (file/row/byte
-  totals): the compaction planner's input — read amplification per
-  bucket at a glance.
+  totals): read amplification per bucket at a glance.
 - ``ledger`` — the exactly-once manifest state: every key in the
   bounded recent window plus the per-prefix folded watermark ranges.
 - ``refs`` — tags/branches (lake/refs.py): name, kind, pinned version.
@@ -42,9 +42,8 @@ vintage, which is how an auditor verifies a purge never touched it.
 from __future__ import annotations
 
 import json
-import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 __all__ = ["metadata_table", "META_KINDS"]
 
@@ -63,31 +62,16 @@ _STATS_SCHEMA = ("file string, column string, min_json string, "
                  "max_json string, is_bloom boolean")
 
 
-def _files_df(spark: SparkSession, root: str, snap,
-              buckets=None) -> DataFrame:
+def _files_df(table, snap, buckets=None) -> DataFrame:
     sel = snap.buckets if buckets is None else {
         b: snap.buckets.get(b, []) for b in buckets
     }
-    pairs = sorted(
-        (f, b) for b, fl in sel.items() for f in fl
-    )
-    if not pairs:
-        return spark.createDataFrame([], schema=_FILES_SCHEMA)
-
-    def _part(it):
-        import pyarrow.parquet as pq
-        for rel, b in it:
-            p = os.path.join(root, rel)
-            try:
-                md = pq.ParquetFile(p).metadata
-                yield (rel, int(b), int(md.num_rows),
-                       int(os.path.getsize(p)), int(md.num_row_groups))
-            except Exception:  # noqa: BLE001 — a vanished/corrupt file
-                yield (rel, int(b), None, None, None)  # shows as NULLs
-
-    n = max(1, min(len(pairs), 64))
-    rdd = spark.sparkContext.parallelize(pairs, n).mapPartitions(_part)
-    return spark.createDataFrame(rdd, schema=_FILES_SCHEMA)
+    pairs = sorted((f, b) for b, fl in sel.items() for f in fl)
+    recs, _ = table._file_records(snap, [f for f, _ in pairs])
+    rows = [(rel, int(b), *(recs.get(rel, {}).get(k)
+                            for k in ("rows", "bytes", "row_groups")))
+            for rel, b in pairs]
+    return table.spark.createDataFrame(rows, schema=_FILES_SCHEMA)
 
 
 def metadata_table(table, kind: str, version=None,
@@ -95,9 +79,8 @@ def metadata_table(table, kind: str, version=None,
     """One of :data:`META_KINDS` as a DataFrame (see module docstring).
     ``table`` is a LakeTable (duck-typed to keep this module free of the
     import cycle); ``version`` may be a number or a ref name. For the
-    ``files``/``partitions`` kinds, ``buckets`` restricts the footer
-    sweep to those buckets BEFORE any I/O (the maintenance planner's
-    O(dirty files) path, lake/planner.py)."""
+    ``files``/``partitions`` kinds, ``buckets`` restricts the view to
+    those buckets."""
     spark = table.spark
     if kind == "snapshots":
         rows = []
@@ -121,12 +104,12 @@ def metadata_table(table, kind: str, version=None,
 
     snap = table.snapshot(version)
     if kind == "files":
-        return _files_df(spark, table.path, snap, buckets)
+        return _files_df(table, snap, buckets)
     if kind == "partitions":
         from pyspark.sql import functions as F
 
         return (
-            _files_df(spark, table.path, snap, buckets)
+            _files_df(table, snap, buckets)
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("files"),
                  F.sum("row_count").alias("rows"),

@@ -21,9 +21,9 @@ Cost/benefit model, all from the metadata plane (zero data I/O):
   lake/table.py: files within one segment add write parallelism, not
   per-key resolution depth) + the ``nonunique`` flag (a raw
   ``batch_dedup=false`` file forces the resolving aggregate even alone).
-- **cost** = the bucket's current bytes (read + rewrite), from the
-  snapshot's file sizes via one executor-side footer sweep
-  (lake/meta.py ``files`` view).
+- **cost** = the bucket's current bytes (read + rewrite), summed from
+  the snapshot's file records (``Snapshot.file_records``): no Spark
+  job, no file opened.
 
 Ranking: generations descending, then bytes ascending (most resolution
 depth bought per byte rewritten), greedily accumulated until
@@ -92,28 +92,22 @@ def plan_compaction(
     if not dirty:
         return CompactionPlan([], 0, 0, 0)
 
-    # one executor-side footer sweep for sizes (metadata-plane only),
-    # restricted to the dirty buckets BEFORE any I/O — O(dirty files)
-    from etl_spark.lake.meta import metadata_table
-
-    sizes = {
-        r["bucket"]: r["bytes"]
-        for r in metadata_table(table, "partitions", version=version,
-                                buckets=sorted(dirty)).collect()
-    }
+    # sizes from the file records, restricted to the dirty buckets —
+    # O(dirty files) dict work
+    sizes = table._bucket_bytes(snap, sorted(dirty))
 
     ranked = sorted(
         dirty,
-        key=lambda b: (-dirty[b], sizes.get(b) or 0, b),
+        key=lambda b: (-dirty[b], sizes[b], b),
     )
     if budget_bytes is None:
         return CompactionPlan(ranked,
-                              sum(sizes.get(b) or 0 for b in ranked),
+                              sum(sizes[b] for b in ranked),
                               0, len(ranked))
     chosen: list[int] = []
     spent = 0
     for b in ranked:
-        cost = sizes.get(b) or 0
+        cost = sizes[b]
         # the top-ranked bucket is always planned (progress guarantee,
         # see module docstring); after that, over-budget candidates are
         # skipped but later cheaper ones may still fit

@@ -38,6 +38,7 @@ __all__ = [
     "encode_bound",
     "decode_bound",
     "read_footers",
+    "file_record",
     "file_matches",
     "prunable_predicates",
 ]
@@ -135,17 +136,51 @@ def degraded_event(phase: str, exc: BaseException, where: str = "") -> dict:
     return {"phase": phase, "error": f"{what}{type(exc).__name__}: {exc}"[:500]}
 
 
-def read_footers(root: str, rel_paths: list[str], cols: list[str]):
+def file_record(md, size: int) -> dict:
+    """A data file's record, kept in the snapshot (``file_records``) so
+    readers never reopen the file for it: footer ``rows`` and
+    ``row_groups``, on-disk ``bytes``, and the tombstone ``state`` its
+    ``_deleted`` statistics prove — ``live`` (no tombstone), ``dead``
+    (only tombstones), ``mixed``, or ``unknown`` (no ``_deleted``
+    column, or a row group without stats). The engine's one derivation
+    of that state."""
+    from etl_spark.lake.table import META_DELETED
+
+    sts = []  # the _deleted stats of every row group; None = missing
+    if md.num_row_groups:
+        rg0 = md.row_group(0)
+        di = next((i for i in range(rg0.num_columns)
+                   if rg0.column(i).path_in_schema == META_DELETED), None)
+        sts = [None] if di is None else [
+            md.row_group(rg).column(di).statistics
+            for rg in range(md.num_row_groups)]
+    if any(st is None or not st.has_min_max for st in sts):
+        state = "unknown"
+    else:
+        dead = any(st.max for st in sts)
+        live = any(not st.min for st in sts)
+        state = "mixed" if dead and live else "dead" if dead else "live"
+    return {"rows": int(md.num_rows), "bytes": int(size),
+            "row_groups": int(md.num_row_groups), "state": state}
+
+
+def read_footers(root: str, rel_paths: list[str], cols: list[str],
+                 records: dict | None = None):
     """Driver-side footer pass: ``({rel: num_rows}, {rel: bounds},
     degraded)``; an unreadable footer leaves its file unbounded with a
-    ``harvest.footer`` record. No threads: a pool measured 2-3x slower."""
+    ``harvest.footer`` record. ``records``, when given, receives each
+    readable file's :func:`file_record`. The one footer pass of the
+    engine outside ``fsck``. No threads: a pool measured 2-3x slower."""
     import pyarrow.parquet as pq
 
     rows, bounds, degraded = {}, {}, []
     for rel in rel_paths:
         try:
-            md = pq.read_metadata(os.path.join(root, rel))
+            p = os.path.join(root, rel)
+            md = pq.read_metadata(p)
             rows[rel] = md.num_rows
+            if records is not None:
+                records[rel] = file_record(md, os.path.getsize(p))
             if st := _footer_stats(md, cols):
                 bounds[rel] = st
         except Exception as exc:  # noqa: BLE001 — must not fail a write

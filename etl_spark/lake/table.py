@@ -418,7 +418,7 @@ class _Written:
     (read once on the driver, lake/stats.py::read_footers)."""
     files: dict[int, list[str]]         # bucket -> new table-relative paths
     lineage: dict[int, dict]            # bucket -> files/bytes/rows
-    rows: dict[str, int]                # file -> footer num_rows
+    records: dict[str, dict]            # file -> stats.file_record
     bounds: dict[str, dict[str, list]]  # file -> zone-map bounds
     degraded: list[dict]
 
@@ -459,6 +459,11 @@ class Snapshot:
     #   Entries live exactly as long as their file is referenced, so the
     #   metadata bound is O(files x stats_cols) — same order as the
     #   bucket file lists themselves.
+    file_records: dict[str, dict] = field(default_factory=dict)
+    #   rel_path -> lake/stats.py::file_record (rows, bytes, row groups,
+    #   tombstone state), read by the commit's footer pass — Iceberg's
+    #   manifest-entry record_count / file_size_in_bytes. Lifecycle as
+    #   file_stats; a file with no entry predates the records.
     commit_ts: float | None = None  # wall-clock publish time (epoch
     #   seconds), stamped by _publish — Iceberg's committed_at. Drives
     #   version_as_of() timestamp travel and the snapshots metadata
@@ -603,6 +608,7 @@ class Snapshot:
                 "applied_count": self.applied_count,
                 "rollback_of": self.rollback_of,
                 "file_stats": self.file_stats,
+                "file_records": self.file_records,
                 "commit_ts": self.commit_ts,
                 "rescale_to": self.rescale_to,
                 "rescale_watermark": self.rescale_watermark,
@@ -635,6 +641,7 @@ class Snapshot:
             applied_count=d.get("applied_count", len(d["applied"])),
             rollback_of=d.get("rollback_of"),
             file_stats=d.get("file_stats", {}),
+            file_records=d.get("file_records", {}),
             commit_ts=d.get("commit_ts"),
             rescale_to=d.get("rescale_to"),
             rescale_watermark=d.get("rescale_watermark", 0),
@@ -1217,7 +1224,8 @@ class LakeTable:
                 table=self, parent_version=snap.version, snapshot=snap,
                 manifest_key=manifest_key,
                 schema=snap.schema, new_files={}, added=[],
-                add_nonunique=[], new_stats={}, rows_written=0,
+                add_nonunique=[], new_stats={}, new_records={},
+                rows_written=0,
                 lineage={}, already_applied=True,
             )
         try:
@@ -1391,7 +1399,7 @@ class LakeTable:
         harvested = self._harvest_stats(snap, w)
         new_snap = self._child(snap, evolved_schema, buckets, manifest_key,
                                add_nonunique=add_nonunique, added=added_files,
-                               new_stats=harvested)
+                               new_stats=harvested, new_records=w.records)
         if stage_only:
             from etl_spark.lake.wap import StagedCommit
 
@@ -1400,7 +1408,8 @@ class LakeTable:
                 manifest_key=manifest_key,
                 schema=evolved_schema, new_files=w.files,
                 added=added_files, add_nonunique=add_nonunique,
-                new_stats=harvested, rows_written=sum(w.rows.values()),
+                new_stats=harvested, new_records=w.records,
+                rows_written=sum(r["rows"] for r in w.records.values()),
                 lineage=w.lineage, degraded=w.degraded,
             )
         self._publish(new_snap)
@@ -1442,7 +1451,7 @@ class LakeTable:
             version=new_snap.version,
             buckets_rewritten=compacted_n,
             buckets_total=snap.n_buckets,
-            rows_written=sum(w.rows.values()),
+            rows_written=sum(r["rows"] for r in w.records.values()),
             partitions=w.lineage,
             degraded=w.degraded,
         )
@@ -1547,74 +1556,44 @@ class LakeTable:
         compaction's expiry pass must rewrite these too, or a tombstone
         in a bucket that never receives another delta survives forever
         (unbounded dead-marker residue on a 100 TB table; it also keeps
-        the fastagg footer tier inert for that bucket). Selection is one
-        executor-side footer sweep, metadata-only: the ``_deleted``
-        boolean column statistics prove tombstone presence, and the
-        version column's footer min refutes expirability when it is
-        entirely >= ``wm``. Conservative where footers are silent (a
-        file whose live rows alone are older than ``wm`` re-selects on
-        every pass — wasteful once, never wrong; watermarks are monotone
-        in practice). Unreadable footers are SKIPPED: maintenance must
-        not be the path that trips over a corrupt file."""
+        the fastagg footer tier inert for that bucket). Selection is
+        metadata-only: the file record's tombstone state proves tombstone
+        presence, and the version column's minimum (its zone map, else
+        one driver footer pass over the tombstone-holding files) refutes
+        expirability when it is entirely >= ``wm``. Conservative where
+        footers are silent (a file whose live rows alone are older than
+        ``wm`` re-selects on every pass — wasteful once, never wrong;
+        watermarks are monotone in practice). Unreadable files are
+        SKIPPED: maintenance must not be the path that trips over a
+        corrupt file."""
+        from etl_spark.lake.stats import _norm, decode_bound
+
         nonuniq = set(snap.nonunique)
-        cand = sorted(
-            (fl[0], int(b)) for b, fl in snap.buckets.items()
+        cand = {
+            fl[0]: int(b) for b, fl in snap.buckets.items()
             if len(fl) == 1 and fl[0] not in nonuniq
             and (restrict is None or b in restrict)
-        )
-        if not cand:
-            return {}
-        from etl_spark.lake.stats import _norm
-
-        wm = _norm(wm)  # tz-aware watermark vs naive-UTC footer bounds
-        root = self.path
+        }
         ts_col = snap.version_cols[0]
-
-        def _part(it):
-            import pyarrow.parquet as pq
-
-            from etl_spark.lake.stats import _footer_stats, decode_bound
-
-            for rel, b in it:
-                p = os.path.join(root, rel)
-                try:
-                    md = pq.ParquetFile(p).metadata
-                except Exception:  # noqa: BLE001 — corrupt footer: not
-                    continue       # maintenance's problem to surface
-                if md.num_rows == 0 or md.num_row_groups == 0:
-                    continue
-                rg0 = md.row_group(0)
-                di = None
-                for i in range(rg0.num_columns):
-                    if rg0.column(i).path_in_schema == META_DELETED:
-                        di = i
-                        break
-                has_tomb = True  # unknown stats => conservative
-                if di is not None:
-                    seen = True
-                    any_true = False
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(di).statistics
-                        if st is None or not st.has_min_max:
-                            seen = False
-                            break
-                        any_true = any_true or bool(st.max)
-                    if seen:
-                        has_tomb = any_true
-                if not has_tomb:
-                    continue
-                try:
-                    bound = _footer_stats(p, [ts_col]).get(ts_col)
-                except Exception:  # noqa: BLE001
-                    bound = None
-                if bound is not None and decode_bound(bound[0]) >= wm:
-                    continue  # every row, tombstones included, >= wm
-                yield (b, rel)
-
-        sc = self.spark.sparkContext
-        n = max(1, min(len(cand), 64))
-        got = sc.parallelize(cand, n).mapPartitions(_part).collect()
-        return {b: [rel] for b, rel in got}
+        unbounded = [
+            f for f in cand
+            if snap.file_records.get(f, {}).get("state") != "live"
+            and ts_col not in snap.file_stats.get(f, {})
+        ]
+        recs, bounds = self._file_records(
+            snap, list(cand), [ts_col], bounds_for=unbounded)
+        wm = _norm(wm)  # tz-aware watermark vs naive-UTC footer bounds
+        out: dict[int, list[str]] = {}
+        for rel, b in cand.items():
+            rec = recs.get(rel)
+            if rec is None or rec["state"] == "live":
+                continue
+            bound = {**snap.file_stats.get(rel, {}),
+                     **bounds.get(rel, {})}.get(ts_col)
+            if bound is not None and decode_bound(bound[0]) >= wm:
+                continue  # every row, tombstones included, >= wm
+            out[b] = [rel]
+        return out
 
     def compact(self, buckets: list[int] | None = None,
                 expire_tombstones_before=None) -> int:
@@ -1623,7 +1602,7 @@ class LakeTable:
         commit with a deterministic manifest key.
 
         With ``expire_tombstones_before`` set, the pass ALSO rewrites
-        already-compacted single-file buckets whose footers prove
+        already-compacted single-file buckets whose file records prove
         expirable tombstones (see :meth:`_expirable_clean_buckets`) —
         without this, a tombstone in a bucket that never dirties again
         would survive every expiry forever.
@@ -1667,7 +1646,8 @@ class LakeTable:
         # _child) — a redundant re-compaction is wasteful, never wrong.
         self._publish(self._child(snap, snap.schema, merged, None, added=[],
                                   add_nonunique=nonunique,
-                                  new_stats=self._harvest_stats(snap, w)))
+                                  new_stats=self._harvest_stats(snap, w),
+                                  new_records=w.records))
         return len(target)
 
     def folded_state(self, version: int | None = None) -> DataFrame:
@@ -1739,7 +1719,8 @@ class LakeTable:
             },
             applied_count=snap.applied_count,
             rollback_of=to_version,
-            file_stats={f: s for f, s in target.file_stats.items()},
+            file_stats=dict(target.file_stats),
+            file_records=dict(target.file_records),
             rescale_to=target.rescale_to,
             rescale_watermark=target.rescale_watermark,
         )
@@ -1773,7 +1754,8 @@ class LakeTable:
             _bucket_of(snap.key_cols, new_n_buckets), new_n_buckets, "r")
         child = self._child(snap, snap.schema, w.files, None, added=[],
                             add_nonunique=nonunique,
-                            new_stats=self._harvest_stats(snap, w))
+                            new_stats=self._harvest_stats(snap, w),
+                            new_records=w.records)
         child.n_buckets = new_n_buckets
         self._publish(child)
         return child.version
@@ -1898,7 +1880,7 @@ class LakeTable:
                 if fl:
                     if len(selected) >= max_buckets:
                         break
-                    cost = self._stored_bytes(fl)
+                    cost = self._bucket_bytes(snap, [b])[b]
                     if selected and budget_bytes is not None and \
                             spent + cost > budget_bytes:
                         break
@@ -1908,6 +1890,7 @@ class LakeTable:
             new_wm = b
             buckets = dict(snap.buckets)
             harvested: dict[str, dict[str, list]] = {}
+            records: dict[str, dict] = {}
             add_nonunique: list[str] = []
             if selected:
                 out, add_nonunique = self._fold_rewrite(
@@ -1917,10 +1900,11 @@ class LakeTable:
                     del buckets[sb]
                 buckets.update(out.files)
                 harvested = self._harvest_stats(snap, out)
+                records = out.records
             done = new_wm >= snap.n_buckets
             child = self._child(snap, snap.schema, buckets, None,
                                 added=[], add_nonunique=add_nonunique,
-                                new_stats=harvested)
+                                new_stats=harvested, new_records=records)
             if done:
                 child.n_buckets = new_n
                 child.rescale_to = None
@@ -2044,7 +2028,8 @@ class LakeTable:
                     _route_of(snap), snap.id_space(), "w", schema=evolved)
                 child = self._child(snap, evolved, w.files, None, added=[],
                                     add_nonunique=nonunique,
-                                    new_stats=self._harvest_stats(snap, w))
+                                    new_stats=self._harvest_stats(snap, w),
+                                    new_records=w.records)
             else:
                 raise ValueError(
                     f"unsupported promotion {old_s} -> {new_s}: only "
@@ -2345,19 +2330,34 @@ class LakeTable:
                     raise
         raise AssertionError("unreachable")
 
-    def _stored_bytes(self, files) -> int:
-        """Driver-side sum of stored file sizes (vanished files count 0
-        — a racing vacuum must not fail planning). An object-store
-        deployment would read catalog-recorded sizes here instead; this
-        is the ONE place to swap that in (salted spread, rescale budget
-        and the auto-rescale policy all size through it)."""
-        total = 0
-        for f in files:
-            try:
-                total += os.stat(os.path.join(self.path, f)).st_size
-            except OSError:
-                pass
-        return total
+    def _file_records(self, snap: Snapshot, files, cols=(),
+                      bounds_for=()) -> tuple[dict, dict]:
+        """``({rel: record}, {rel: bounds})`` for ``files``: records from
+        ``snap.file_records``, no I/O. Files with no record and the
+        ``bounds_for`` files get theirs, plus their ``cols`` footer
+        bounds, from ONE driver footer pass (stats.read_footers); a file
+        it cannot read (vanished, corrupt) has none — a racing vacuum
+        must not fail planning."""
+        skip = set(bounds_for)
+        recs = {f: snap.file_records[f] for f in files
+                if f in snap.file_records and f not in skip}
+        need = sorted(f for f in files if f not in recs)
+        if not need:
+            return recs, {}
+        _, bounds, _ = read_footers(self.path, need, list(cols), recs)
+        return recs, bounds
+
+    def _bucket_bytes(self, snap: Snapshot, buckets=None) -> dict[int, int]:
+        """Stored bytes per bucket (all of ``snap``'s, or ``buckets``),
+        summed from the file records. The salted spread, the rescale
+        budget, the auto-rescale policy and the compaction planner all
+        size through it."""
+        sel = {b: snap.buckets.get(b, []) for b in
+               (snap.buckets if buckets is None else buckets)}
+        recs, _ = self._file_records(
+            snap, [f for fl in sel.values() for f in fl])
+        return {b: sum(recs[f]["bytes"] for f in fl if f in recs)
+                for b, fl in sel.items()}
 
     @staticmethod
     def _bijection_spread(n_buckets: int):
@@ -2389,9 +2389,8 @@ class LakeTable:
         lists and read-time LWW resolves across them; the compaction
         trigger counts delta GENERATIONS, not files, so split writes don't
         masquerade as read-amplification). Split factors are SELF-TUNING
-        from the table's own layout: each bucket's stored bytes
-        (driver-side stat of its referenced files — an object-store
-        deployment would read catalog-recorded sizes; very wide layouts
+        from the table's own layout: each bucket's stored bytes (summed
+        from the snapshot's file records, no I/O; very wide layouts
         would ship the unit map as a broadcast join instead of literals)
         decide how many units its incoming rows decompose into, capped at
         16. Under stationary CDC skew (hot repos stay hot — the north-star
@@ -2399,8 +2398,7 @@ class LakeTable:
         merge into an empty table and the no-skew case run the plain
         bijection."""
         n = snap.id_space()
-        sizes = {b: self._stored_bytes(fl)
-                 for b, fl in snap.buckets.items()}
+        sizes = self._bucket_bytes(snap)
         mean = sum(sizes.values()) / max(n, 1)
         factors = {
             b: min(16, int(round(s / mean)))
@@ -2441,9 +2439,11 @@ class LakeTable:
         spread,
     ) -> _Written:
         """Write per-bucket parquet files, move them into place and read
-        each new file's footer once, on the driver: its ``num_rows`` (the
-        per-bucket lineage and ``rows_written``) and its ``stats_cols``
-        zone-map bounds. No Spark job besides the write itself.
+        each new file's footer once, on the driver: its record (rows,
+        bytes, row groups, tombstone state — the per-bucket lineage,
+        ``rows_written`` and ``Snapshot.file_records``) and its
+        ``stats_cols`` zone-map bounds. No Spark job besides the write
+        itself.
 
         ``sort_cols`` clusters rows within each bucket file before writing
         (parquet row-group min/max stats then prune point lookups inside a
@@ -2486,7 +2486,6 @@ class LakeTable:
             .parquet(staging)
         )
         new_files: dict[int, list[str]] = {}
-        lineage: dict[int, dict] = {}
         # Publish = ONE rename per bucket directory (O(buckets), not
         # O(files)): the staged `__bucket=N` dirs move into the commit's
         # segment dir as `bNNNNN` (stripping the `name=value` shape so a
@@ -2503,25 +2502,23 @@ class LakeTable:
             bdir_rel = f"{seg_rel}/b{bkt:05d}"
             bdir_abs = os.path.join(self.path, bdir_rel)
             os.rename(os.path.join(staging, entry), bdir_abs)
-            files = []
-            b_bytes = 0
-            with os.scandir(bdir_abs) as it:
-                for de in sorted(it, key=lambda d: d.name):
-                    if not de.name.endswith(".parquet"):
-                        continue
-                    files.append(f"{bdir_rel}/{de.name}")
-                    b_bytes += de.stat().st_size
-            new_files[bkt] = files
-            lineage[bkt] = {"files": len(files), "bytes": b_bytes}
+            new_files[bkt] = sorted(
+                f"{bdir_rel}/{name}" for name in os.listdir(bdir_abs)
+                if name.endswith(".parquet"))
         shutil.rmtree(staging, ignore_errors=True)
         if not new_files:
             shutil.rmtree(seg_abs, ignore_errors=True)
-        rows, bounds, degraded = read_footers(
+        records: dict[str, dict] = {}
+        _, bounds, degraded = read_footers(
             self.path, [f for fl in new_files.values() for f in fl],
-            stats_cols)
-        for bkt, files in new_files.items():
-            lineage[bkt]["rows"] = sum(rows.get(f, 0) for f in files)
-        return _Written(new_files, lineage, rows, bounds, degraded)
+            stats_cols, records)
+        lineage = {
+            bkt: {"files": len(files),
+                  **{k: sum(records[f][k] for f in files if f in records)
+                     for k in ("bytes", "rows")}}
+            for bkt, files in new_files.items()
+        }
+        return _Written(new_files, lineage, records, bounds, degraded)
 
     def _harvest_stats(self, snap: Snapshot, w: _Written
                        ) -> dict[str, dict[str, list]]:
@@ -2532,16 +2529,16 @@ class LakeTable:
         out = {rel: dict(b) for rel, b in w.bounds.items()}
         rels = [f for fl in w.files.values() for f in fl]
         for rel, entry in self._harvest_blooms(
-                snap, rels, w.rows, w.degraded).items():
+                snap, rels, w.records, w.degraded).items():
             out.setdefault(rel, {}).update(entry)
         return out
 
     def _harvest_blooms(
-        self, snap: Snapshot, rels: list[str], rows: dict[str, int],
+        self, snap: Snapshot, rels: list[str], records: dict[str, dict],
         degraded: list[dict],
     ) -> dict[str, dict[str, list]]:
         """Per-file blooms for the ``bloom_cols`` prop over ``rels``,
-        sized from their footer row counts ``rows`` under ``bloom_bits:
+        sized from their file ``records``' row counts under ``bloom_bits:
         "auto"``. Tombstone rows are INCLUDED (their key values must
         keep their file unprunable so a delete can win its key's LWW);
         columns absent from the prop's validated set are skipped.
@@ -2564,8 +2561,9 @@ class LakeTable:
             m_by_rel = None
             if m == "auto":
                 bpk = int(snap.props.get("bloom_bits_per_key", 10))
-                m_by_rel = {rel: auto_bits(rows.get(rel, 0), bpk)
-                            for rel in rels}
+                m_by_rel = {
+                    rel: auto_bits(records.get(rel, {}).get("rows", 0), bpk)
+                    for rel in rels}
                 m = DEFAULT_BITS
             inline_max = int(
                 snap.props.get("bloom_inline_max_bytes", 16384))
@@ -2587,18 +2585,20 @@ class LakeTable:
         add_nonunique: list[str] = (),
         added: list[str] | None = None,
         new_stats: dict[str, dict[str, list]] | None = None,
+        new_records: dict[str, dict] | None = None,
     ) -> Snapshot:
         referenced = {f for fl in buckets.values() for f in fl}
         nonunique = sorted(
             (set(snap.nonunique) | set(add_nonunique)) & referenced
         )
-        # zone maps follow their files: parent entries for still-referenced
-        # files carry over, de-referenced entries drop (bounded metadata)
-        file_stats = {
-            f: s
-            for f, s in {**snap.file_stats, **(new_stats or {})}.items()
-            if f in referenced
-        }
+
+        # zone maps and file records follow their files: parent entries
+        # for still-referenced files carry over, de-referenced entries
+        # drop (bounded metadata)
+        def carry(old: dict, new: dict | None) -> dict:
+            return {f: e for f, e in {**old, **(new or {})}.items()
+                    if f in referenced}
+
         # Bounded exactly-once metadata: the applied ledger keeps only the
         # most recent `manifest_window` keys verbatim; older sequence-shaped
         # keys ("prefix:123") fold into a per-prefix high-watermark on
@@ -2663,7 +2663,8 @@ class LakeTable:
             added=sorted(added) if added is not None else None,
             applied_watermarks=watermarks,
             applied_count=snap.applied_count + (1 if manifest_key is not None else 0),
-            file_stats=file_stats,
+            file_stats=carry(snap.file_stats, new_stats),
+            file_records=carry(snap.file_records, new_records),
             rescale_to=snap.rescale_to,
             rescale_watermark=snap.rescale_watermark,
         )
@@ -2716,13 +2717,14 @@ class LakeTable:
 
     def backfill_stats(self) -> int:
         """Harvest zone maps AND blooms for referenced files that predate
-        ``stats_cols`` / ``bloom_cols`` (or were written while unset) and
-        commit them as a metadata-only child. Zone maps: a driver-side
-        footer pass; blooms: one zero-shuffle data pass over only the
-        not-yet-covered files. Returns how many files gained entries;
-        no-op without the props. Raises (rather than silently skipping)
-        on a non-bloomable ``bloom_cols`` declaration — this is the
-        migration entry point, errors must be loud here."""
+        ``stats_cols`` / ``bloom_cols`` (or were written while unset), and
+        the file records of files written before records existed, and
+        commit them as a metadata-only child. Zone maps and records: one
+        driver-side footer pass; blooms: one zero-shuffle data pass over
+        only the not-yet-covered files. Returns how many files gained
+        entries; no-op when nothing is missing. Raises (rather than
+        silently skipping) on a non-bloomable ``bloom_cols`` declaration
+        — this is the migration entry point, errors must be loud here."""
         snap = self.current_snapshot()
         from etl_spark.lake.bloom import BLOOM_SUFFIX, validate_bloom_cols
 
@@ -2730,36 +2732,42 @@ class LakeTable:
         bcols = snap.bloom_cols()
         if bcols:
             validate_bloom_cols(snap.schema, bcols)
+        files = [f for fl in snap.buckets.values() for f in fl]
         # column-level check, not entry-level: a file may already carry a
         # bloom entry (so it IS in file_stats) yet predate a newly added
         # stats column — its zone maps still need harvesting
         missing = [
-            f for fl in snap.buckets.values() for f in fl
+            f for f in files
             if any(c not in snap.file_stats.get(f, {}) for c in cols)
-        ] if cols else []
+        ]
         bloom_missing = [
-            f for fl in snap.buckets.values() for f in fl
+            f for f in files
             if any(c + BLOOM_SUFFIX not in snap.file_stats.get(f, {})
                    for c in bcols)
-        ] if bcols else []
-        if not missing and not bloom_missing:
+        ]
+        unrecorded = [f for f in files if f not in snap.file_records]
+        need = sorted(set(missing) | set(bloom_missing) | set(unrecorded))
+        if not need:
             return 0
-        rows, bounds, degraded = read_footers(
-            self.path, sorted(set(missing) | set(bloom_missing)), cols)
+        records: dict[str, dict] = {}
+        _, bounds, degraded = read_footers(self.path, need, cols, records)
         got = {rel: bounds[rel] for rel in missing if rel in bounds}
         for rel, entry in self._harvest_blooms(
-                snap, bloom_missing, rows, degraded).items():
+                snap, bloom_missing, records, degraded).items():
             got.setdefault(rel, {}).update(entry)
-        if not got:
+        new_records = {rel: records[rel] for rel in unrecorded
+                       if rel in records}
+        if not got and not new_records:
             return 0
         merged = {
             f: {**snap.file_stats.get(f, {}), **entry}
             for f, entry in got.items()
         }
         child = self._child(snap, snap.schema, snap.buckets, None,
-                            added=[], new_stats=merged)
+                            added=[], new_stats=merged,
+                            new_records=new_records)
         self._publish(child)
-        return len(got)
+        return len(got.keys() | new_records.keys())
 
     def applied_manifests(self) -> set[str]:
         """The bounded RECENT WINDOW of applied manifest keys — NOT the
@@ -2857,7 +2865,7 @@ class LakeTable:
         ``tbl.files`` / ``tbl.snapshots`` / … surface): one of
         ``snapshots files partitions ledger refs stats`` — see
         lake/meta.py. ``version`` may be a number or a ref name;
-        ``buckets`` prunes the files/partitions footer sweep before I/O."""
+        ``buckets`` restricts the files/partitions views."""
         from etl_spark.lake.meta import metadata_table
 
         return metadata_table(self, kind, version, buckets)

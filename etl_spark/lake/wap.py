@@ -78,6 +78,7 @@ class StagedCommit:
     added: list[str]
     add_nonunique: list[str]
     new_stats: dict[str, dict[str, list]]
+    new_records: dict[str, dict]
     rows_written: int
     lineage: dict
     already_applied: bool = False
@@ -135,7 +136,7 @@ class StagedCommit:
                 child = t._child(
                     cur, schema, buckets, self.manifest_key,
                     add_nonunique=self.add_nonunique, added=self.added,
-                    new_stats=self.new_stats,
+                    new_stats=self.new_stats, new_records=self.new_records,
                 )
             try:
                 t._publish(child)

@@ -77,7 +77,7 @@ def main() -> None:
                     help="integrity audit (lake/fsck.py): metadata "
                          "invariants + executor-side footer sweep "
                          "(existence, corruption, sidecars, zone-map "
-                         "bounds); report under 'fsck'")
+                         "bounds, file records); report under 'fsck'")
     ap.add_argument("--fsck-deep", action="store_true",
                     help="fsck plus the O(table) row-placement scan")
     ap.add_argument("--rebucket", type=int, default=None,
@@ -96,13 +96,14 @@ def main() -> None:
     ap.add_argument("--audit-counts", action="store_true",
                     help="report the POST-maintenance live row count via "
                          "the metadata-plane aggregate (lake/fastagg.py: "
-                         "footer tier where compaction allows) plus the "
+                         "record tier where compaction allows) plus the "
                          "tier breakdown — the reference's per-load "
                          "row-count bookkeeping, priced for lake scale")
     ap.add_argument("--backfill-stats", action="store_true",
-                    help="harvest zone maps and Bloom filters for "
-                         "referenced files that predate stats_cols/"
-                         "bloom_cols (migration entry point)")
+                    help="harvest zone maps, Bloom filters and file "
+                         "records for referenced files that predate "
+                         "stats_cols/bloom_cols or the records "
+                         "(migration entry point)")
     ap.add_argument("--tag", action="append", default=[],
                     metavar="NAME[=VERSION]",
                     help="pin a snapshot under an immutable tag "
@@ -181,14 +182,13 @@ def main() -> None:
     if args.auto_rescale_max_bucket_bytes is not None and \
             args.rescale_to is None:
         # layout policy: mean stored bytes per bucket vs the cap. Uses
-        # the same driver-side file sizes the salted spread reads; only
+        # the same recorded file sizes the salted spread reads; only
         # proposes a 2x grow (repeat invocations compound as needed).
         snap = table.current_snapshot()
         if snap.rescale_to is not None:
             args.rescale_to = snap.rescale_to  # drain the in-flight one
         else:
-            total = table._stored_bytes(
-                f for fl in snap.buckets.values() for f in fl)
+            total = sum(table._bucket_bytes(snap).values())
             mean = total / max(snap.n_buckets, 1)
             report["auto_rescale_mean_bucket_bytes"] = int(mean)
             if mean > args.auto_rescale_max_bucket_bytes:

@@ -86,6 +86,37 @@ def test_swapped_bytes_detected_by_zone_maps(spark, tmp_root):
     assert any(m["file"] == vb for m in rep["stats_mismatches"]), rep
 
 
+def test_record_mismatch_detected(spark, tmp_root):
+    """``meta("files")``, ``fast_count`` and the planners trust each
+    file's record without opening the file, so fsck compares them: a
+    forged record and a file rewritten in place (one row short, a valid
+    footer, no zone maps to catch it) are both ``record_mismatches``."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    t = _mk(spark, tmp_root, "records", props={})
+    assert check_integrity(t)["ok"]
+    snap = t.current_snapshot()
+    buckets = [b for b, fl in snap.buckets.items() if fl]
+    va, vb = snap.buckets[buckets[0]][0], snap.buckets[buckets[1]][0]
+
+    p = t._snap_path(snap.version)
+    with open(p) as fh:
+        d = json.load(fh)
+    d["file_records"][va]["rows"] += 1
+    os.unlink(p)
+    with open(p, "w") as fh:
+        json.dump(d, fh)
+    pb = os.path.join(t.path, vb)
+    pq.write_table(pq.read_table(pb).slice(1), pb)
+
+    rep = check_integrity(t)
+    assert not rep["ok"]
+    assert {m["file"] for m in rep["record_mismatches"]} == {va, vb}, rep
+    assert not rep["missing_files"] and not rep["corrupt_footers"]
+
+
 def test_missing_bloom_sidecar_detected(spark, tmp_root):
     t = _mk(spark, tmp_root, "sidecar",
             props={"stats_cols": "op_ts", "bloom_cols": "repo|path",
