@@ -23,6 +23,14 @@ import tempfile
 import time
 
 
+def loadavg() -> list[float]:
+    """The host's 1/5/15-minute load averages. Recorded at the start and
+    the end of a run, with ``nproc``, beside the ``cpus`` it requested:
+    neighbour load on a shared host moves every number above by more
+    than 2x."""
+    return [round(x, 2) for x in os.getloadavg()]
+
+
 def run_replay_bench(spark, n_events: int, n_buckets: int, parallelism: int,
                      reps: int = 3):
     """Generate a deterministic WAL once, replay it ``reps`` times (after a
@@ -188,6 +196,7 @@ BENCH_QUERIES = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    load_start = loadavg()
     # 8M events amortizes per-merge fixed costs at local[32] (2M is
     # overhead-bound: ~150k evt/s vs ~550k at 8M on idle hardware).
     n_events = int(os.environ.get("BENCH_EVENTS", "8000000"))
@@ -247,6 +256,9 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "replay": replay,
         "cpus": cpus,
+        "nproc": len(os.sched_getaffinity(0)),
+        "loadavg_start": load_start,
+        "loadavg_end": loadavg(),
         "bench_events": n_events,
     }
     print(json.dumps(out))

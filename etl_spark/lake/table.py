@@ -48,6 +48,7 @@ on local[32]):
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -58,7 +59,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    ByteType, DateType, IntegerType, LongType, ShortType, StringType,
+    StructField, StructType,
+)
 
 from etl_spark.lake.stats import degraded_event, read_footers
 
@@ -108,6 +112,117 @@ def _route_of(snap):
     new_b = F.pmod(h, F.lit(snap.rescale_to)).cast("int")
     return F.when(old_b < F.lit(snap.rescale_watermark), new_b) \
         .otherwise(old_b)
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_lane(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned 64-bit result) — the public algorithm
+    Catalyst's XxHash64 runs: ``hashUnsafeBytes`` for a string's UTF-8
+    bytes; ``hashInt``/``hashLong`` are this over the 4/8 little-endian
+    bytes of the value."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh64_lane(v[j], int.from_bytes(
+                    data[i + 8 * j:i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_lane(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        k = _xxh64_lane(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl64(h ^ k, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        k = int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl64(h ^ k, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
+_EPOCH_ORDINAL = datetime.date(1970, 1, 1).toordinal()
+
+
+def _key_bytes(dtype, value) -> bytes | None:
+    """The bytes Spark's xxhash64 hashes for one non-NULL key value, or
+    None when the column type is not covered or ``value`` is not exactly
+    of it (a bool, ``"42"`` against a bigint, an out-of-range int)."""
+    if isinstance(dtype, StringType):
+        if dtype.collation != "UTF8_BINARY" or type(value) is not str:
+            return None
+        try:
+            return value.encode("utf-8")
+        except UnicodeEncodeError:  # a lone surrogate
+            return None
+    if isinstance(dtype, DateType):
+        if type(value) is not datetime.date:
+            return None
+        return (value.toordinal() - _EPOCH_ORDINAL).to_bytes(
+            4, "little", signed=True)
+    bits = _INT_BITS.get(type(dtype))
+    if bits is None or type(value) is not int or \
+            not -(1 << (bits - 1)) <= value < 1 << (bits - 1):
+        return None
+    return value.to_bytes(8 if bits == 64 else 4, "little", signed=True)
+
+
+def _route_keys(snap, tuples) -> list[int] | None:
+    """Driver twin of :func:`_route_of` for Python key tuples: the
+    sorted distinct bucket ids they route to under ``snap`` (the
+    mid-rescale watermark CASE included), with no Spark job. Spark's
+    column chaining: seed 42, each column's hash seeds the next, a NULL
+    column leaves the seed unchanged; then ``pmod`` of the signed hash.
+
+    Covered key types: ``string``, ``tinyint``/``smallint``/``int``/
+    ``date`` (``hashInt``) and ``bigint`` (``hashLong``). Any other key
+    type, or a value its column type cannot hold exactly, returns None —
+    no bucket pruning; the caller's residual filter still coerces and
+    matches such a value. Parity with ``F.xxhash64`` is pinned by
+    tests/test_route_keys.py."""
+    by_name = {f.name: f.dataType for f in snap.schema.fields}
+    types = [by_name[c] for c in snap.key_cols]
+    out = set()
+    for key in tuples:
+        if len(key) != len(types):
+            return None
+        h = 42
+        for dtype, v in zip(types, key):
+            if v is None:
+                continue
+            data = _key_bytes(dtype, v)
+            if data is None:
+                return None
+            h = _xxh64(data, h)
+        h -= (h >> 63) << 64  # Spark's signed long
+        b = h % snap.n_buckets
+        if snap.rescale_to is not None and b < snap.rescale_watermark:
+            b = h % snap.rescale_to
+        out.add(b)
+    return sorted(out)
 
 
 _VINTAGE_RE = re.compile(r"^[^/]+/v(\d+)")
@@ -929,10 +1044,15 @@ class LakeTable:
 
         The candidate key set is the cartesian product of each key
         column's pinned values (a SUPERSET of the matching rows' keys,
-        so hashing it driver-side gives a sound bucket superset); a
-        composite tuple predicate over exactly the key columns pins the
-        pairing directly and wins. Bounded: above 256 candidate tuples
-        the planning job costs more than it prunes — skip. This is what
+        so routing it with :func:`_route_keys` gives a sound bucket
+        superset, on the driver, with no Spark job); a composite tuple
+        predicate over exactly the key columns pins the pairing directly
+        and wins. Bounded: the cartesian product grows multiplicatively
+        with each pinned column, and a superset that large routes to
+        most buckets anyway — above 256 candidate tuples, skip. A value
+        ``_route_keys`` cannot hash exactly (``'42'`` against a bigint
+        key) also means no pruning — never a failed read: the residual
+        filter ANSI-coerces it and must keep matching. This is what
         makes ``read(where=<full key>)`` — and therefore predicate DML
         on a key — O(matched buckets) instead of O(table): zone maps
         cannot refute hash-distributed key values, so without this every
@@ -966,23 +1086,9 @@ class LakeTable:
                 tuples = [t + (v,) for t in tuples for v in per_col[c]]
                 if len(tuples) > 256:
                     return None
-        if not tuples or len(tuples) > 256:
-            return None if tuples else []
-        by_name = {f.name: f for f in snap.schema.fields}
-        try:
-            key_rows = self.spark.createDataFrame(
-                tuples, StructType([by_name[c] for c in snap.key_cols])
-            )
-            return sorted({
-                r["__b"] for r in key_rows.select(
-                    self.bucket_expr(snap).alias("__b")).collect()
-            })
-        except Exception:  # noqa: BLE001 — createDataFrame is TYPE-STRICT
-            # while the residual filter ANSI-coerces (e.g. '42' against a
-            # bigint key matched before this optimization existed, and
-            # must keep matching). A value the strict path rejects just
-            # means no pruning — never a failed read.
+        if len(tuples) > 256:
             return None
+        return _route_keys(snap, tuples)
 
     def scan_counts(
         self,
@@ -1104,20 +1210,22 @@ class LakeTable:
 
     def lookup(self, keys: list[tuple], version: int | None = None) -> DataFrame:
         """Point lookups with bucket pruning: hash the requested keys
-        driver-side, read ONLY their buckets (≈ |distinct buckets| /
-        n_buckets of the table), then filter exactly. The reference's
-        memoized per-value point SELECTs (geografias.py lru_cache) at lake
-        scale: a k-key lookup touches ≤ k buckets regardless of table size.
+        driver-side (:func:`_route_keys`, no Spark job), read ONLY their
+        buckets (≈ |distinct buckets| / n_buckets of the table), then
+        filter exactly. The reference's memoized per-value point SELECTs
+        (geografias.py lru_cache) at lake scale: a k-key lookup touches
+        ≤ k buckets regardless of table size. A key type ``_route_keys``
+        does not cover reads every bucket; the per-column IN lists and
+        blooms below still prune files.
         """
         snap = self.snapshot(version)
         by_name = {f.name: f for f in snap.schema.fields}
+        # the exact-match side of the semi join (type-strict: a key of
+        # the wrong type raises here)
         key_rows = self.spark.createDataFrame(
             keys, StructType([by_name[c] for c in snap.key_cols])
         )
-        want_buckets = sorted({
-            r["__b"] for r in key_rows.select(
-                self.bucket_expr(snap).alias("__b")).collect()
-        })
+        want_buckets = _route_keys(snap, [tuple(k) for k in keys])
         # Per-column IN-list predicate (a superset of the exact key set),
         # routed through read(where=...): with stats_cols covering key
         # columns it prunes whole FILES from footer zone maps (sound on

@@ -6,6 +6,16 @@ The reference tunes batch size / concurrency by env vars
 implementar_fluxos.py:133). We centralize the Spark equivalents here:
 AQE on (runtime re-plan + skew-join splitting), shuffle partitions sized
 to the parallelism level, Arrow enabled for the pandas-UDF residue.
+
+File listing: a ``LakeTable`` read names its data files explicitly
+(snapshot metadata, never a directory listing), and Spark starts a
+parallel file-listing JOB for any read of more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32 by
+default) — one job per scan, change feed and merge bloom pass before any
+row is read. ``get_spark`` raises that threshold to 100000, above any
+snapshot's file count, so the paths are listed on the driver instead.
+A session built outside ``get_spark`` keeps Spark's default (correct,
+one listing job slower per read).
 """
 
 from __future__ import annotations
@@ -52,6 +62,13 @@ def get_spark(
         # statistics, which would blind both row-group pushdown and the
         # LakeTable zone-map file pruning (lake/stats.py)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # list a read's explicit file paths on the driver, not in a Spark
+        # job (see the module docstring): one stat per path on a local FS.
+        # On an object store that is one HEAD per path; the real fix
+        # there is a file index built from snapshot metadata (the
+        # manifest split), not a listing at all
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "100000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -30,6 +30,7 @@ def main() -> None:
     reps = int(sys.argv[4]) if len(sys.argv) > 4 else 5
 
     from etl_spark.cdc import replay_events, synth_events, write_event_epochs
+    from etl_spark.lake.table import _route_keys
     from etl_spark.session import get_spark
 
     scratch = tempfile.mkdtemp(prefix="bloombench_", dir="/dev/shm")
@@ -76,12 +77,7 @@ def main() -> None:
             # count files over the PROBED BUCKETS only — the same file
             # set lookup() actually plans — so files_read/pruned is the
             # real I/O delta, not an all-bucket diagnostic.
-            snap = t.current_snapshot()
-            key_rows = spark.createDataFrame(keys, "repo string, path string")
-            want = sorted({
-                r["__b"] for r in key_rows.select(
-                    t.bucket_expr(snap).alias("__b")).collect()
-            })
+            want = _route_keys(t.current_snapshot(), keys)
             where = [("repo", "in", [k[0] for k in keys]),
                      ("path", "in", [k[1] for k in keys]),
                      (("repo", "path"), "in", keys)]
